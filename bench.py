@@ -705,9 +705,10 @@ def main() -> None:
     # per-memo build stamps (name, seconds, payer query) so amortized
     # numbers decompose into build vs ride from the artifact alone
     # (r13 verdict task 3).  Builds can NEST (e.g. the shingle spine
-    # inside the AllPairs truth build) — each entry times its own span,
-    # so nested seconds overlap the parent's; consumers should not sum
-    # blindly across entries.
+    # inside the AllPairs truth build) — each entry times its whole
+    # build() call, so a parent's seconds include every memo built
+    # inside it; consumers should not sum blindly across entries.  The
+    # list holds the newest cache.MEMO_BUILDS_MAX builds.
     try:
         from trx_spark import cache as cache_mod
 
@@ -720,7 +721,7 @@ def main() -> None:
     # (r13 verdict task 1).  BENCH_DETAIL.json stays the canonical
     # latest-run artifact for backward compatibility.
     n_cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    detail["cpus"] = int(n_cpus) if str(n_cpus).isdigit() else None
+    detail["cpus"] = int(n_cpus) if n_cpus.isdigit() else os.cpu_count()
     out["cpus"] = detail["cpus"]
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     detail_path = os.path.join(repo_dir, "BENCH_DETAIL.json")

@@ -35,38 +35,55 @@ def test_distinct_sf_dirs_get_distinct_stages(spark, sf_dir):
 
 
 def test_clear_stage_caches(spark, sf_dir):
-    from trx_spark.cache import clear_stage_caches, stage_cache_stats
+    """clear_stage_caches empties every kind of memo: a checkpointed
+    DataFrame (token_stream), a side-effect fixture (mg_landing) and an
+    argument-keyed memo (allpairs_truth, keyed on key_cap) — whose
+    default-applied and explicit-default calls share one entry."""
+    from trx_spark.cache import MEMO_BUILDS, clear_stage_caches, stage_cache_stats
     from trx_spark.queries.curation import _token_stream
+    from trx_spark.queries.streamingq import _mg_landing
+    from trx_spark.queries.textdata import _ALLPAIRS_KEY_CAP, allpairs_jaccard_join
 
+    clear_stage_caches()
     _token_stream(spark, sf_dir)
-    assert stage_cache_stats()["token_stream"] >= 1
-    assert clear_stage_caches() >= 1
+    _mg_landing(spark, sf_dir)
+    truth = allpairs_jaccard_join(spark, sf_dir)
+    builds = len(MEMO_BUILDS)
+    assert allpairs_jaccard_join(spark, sf_dir, key_cap=_ALLPAIRS_KEY_CAP) is truth
+    assert len(MEMO_BUILDS) == builds  # a hit builds nothing
+    stats = stage_cache_stats()
+    for name in ("token_stream", "mg_landing", "allpairs_truth"):
+        assert stats[name] == 1, (name, stats[name])
+    assert clear_stage_caches() >= 3
     assert all(v == 0 for v in stage_cache_stats().values())
     # next consumer rebuilds transparently
     assert _token_stream(spark, sf_dir).count() > 0
 
 
-def test_every_memo_dict_is_registered():
-    """Every module-level ``*_CACHE`` dict in the query/operator
-    modules must be covered by cache._all_caches() — an unregistered
-    memo survives clear_stage_caches() holding an unpersisted
+def test_no_module_level_memo_dicts():
+    """Every memo goes through trx_spark.cache's registry, so
+    clear_stage_caches() reaches it by construction. A hand-rolled
+    module-level dict would survive the clear holding an unpersisted
     localCheckpoint, which crashes the next consumer with
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (the bench cold pass found
-    exactly this for the knn edge memo)."""
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (the bench cold pass once found
+    exactly this for the knn edge memo). A memo dict is recognized by
+    its name or by being empty once every module is imported (constant
+    tables are never empty; a memo stays empty until a query runs)."""
     import importlib
     import pkgutil
 
-    from trx_spark import cache as cache_mod
-    import trx_spark.queries as qpkg
-    import trx_spark.operators as opkg
+    import trx_spark
 
-    registered = {id(c) for c in cache_mod._all_caches()}
-    missing = []
-    for pkg in (qpkg, opkg):
-        for info in pkgutil.iter_modules(pkg.__path__):
-            mod = importlib.import_module(f"{pkg.__name__}.{info.name}")
-            for name, val in vars(mod).items():
-                if name.endswith("_CACHE") and isinstance(val, dict):
-                    if id(val) not in registered:
-                        missing.append(f"{mod.__name__}.{name}")
-    assert not missing, f"memo dicts not in cache._all_caches(): {missing}"
+    mods = [
+        importlib.import_module(info.name)
+        for info in pkgutil.walk_packages(trx_spark.__path__, "trx_spark.")
+        if info.name != "trx_spark.cache"
+    ]
+    offenders = [
+        f"{mod.__name__}.{name}"
+        for mod in mods
+        for name, val in vars(mod).items()
+        if isinstance(val, dict)
+        and (name.endswith(("_CACHE", "_MEMO")) or not val)
+    ]
+    assert not offenders, f"module-level memo dicts: {offenders}"

@@ -227,3 +227,40 @@ def test_empty_landing_returns_typed_empty(spark, tmp_path):
     )
     assert got.count() == 0
     assert got.columns == ["doc_id", "quality_keep", "exact_first", "near_dup", "keep"]
+
+
+def test_pool_legs_stay_in_job_group(spark, tmp_path):
+    """The handler runs its hash/band legs and its two store appends on
+    pool threads; each submits through ``inheritable_thread_target``,
+    so every job the handler launches carries the caller's job group
+    (the microbatch's, under foreachBatch) and cancelling that group
+    reaches the pool legs too."""
+    from trx_spark.streaming.curation import make_curation_batch_handler
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker_jobs(group):
+        sc.setJobGroup(group, group)
+        spark.range(1).count()
+        return tracker.getJobIdsForGroup(group)
+
+    handle = make_curation_batch_handler(
+        str(tmp_path / "hashes"),
+        str(tmp_path / "bands"),
+        str(tmp_path / "verdicts"),
+    )
+    batch = spark.createDataFrame(
+        [(d, t, s, l, len(t)) for d, t, s, l in _docs()[0]], _SCHEMA
+    )
+    group = "curation_epoch_0"
+    before = max(marker_jobs("curation_before"))
+    try:
+        sc.setJobGroup(group, "curation handler")
+        handle(batch, 0)
+        after = min(marker_jobs("curation_after"))
+    finally:
+        sc.setJobGroup("", "")
+    launched = set(range(before + 1, after))
+    assert launched, "the handler launched no jobs"
+    assert launched <= set(tracker.getJobIdsForGroup(group))

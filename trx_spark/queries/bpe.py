@@ -51,13 +51,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memoized
+
 _SEP = "\x1f"  # unit separator — cannot occur inside [a-z]+ tokens
 _BPE_VOCAB = 256  # words in the training dictionary (top-K by freq)
 _BPE_MERGES = 8  # merge rounds (static unroll, mirrored in the oracle)
-
-# trained state memo per (session, sf_dir): (merges_df, words_df) —
-# bpe_encode rides the same training run as bpe_merges
-_BPE_CACHE: dict = {}
 
 # symbol-aligned merge application (see module docstring): fold the
 # symbol array, fusing exact adjacent symbols (l, r) only. Runs over
@@ -103,13 +101,10 @@ def _pair_counts(words: DataFrame) -> DataFrame:
     )
 
 
+# trained state memo per (session, sf_dir): (merges_df, words_df) —
+# bpe_encode rides the same training run as bpe_merges
+@memoized("bpe_trained")
 def _train(spark: SparkSession, sf_dir: str):
-    key = (spark, sf_dir)
-    if key in _BPE_CACHE:
-        return _BPE_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
-    _t0 = build_start()
     # initial symbol sequence: chars joined by the separator
     words = _word_freq(spark, sf_dir).select(
         "word",
@@ -152,9 +147,7 @@ def _train(spark: SparkSession, sf_dir: str):
     merges = merge_rows[0]
     for m in merge_rows[1:]:
         merges = merges.unionByName(m)
-    _BPE_CACHE[key] = (merges.localCheckpoint(), words)
-    build_done("bpe_trained", _t0)
-    return _BPE_CACHE[key]
+    return (merges.localCheckpoint(), words)
 
 
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

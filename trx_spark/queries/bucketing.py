@@ -46,25 +46,19 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memoized
 from trx_spark.exact import dsum, sql_dsum
 from trx_spark.tables import load_table
 
 N_BUCKETS = 8
 
-_BUCKETED_CACHE: dict = {}
 
-
+@memoized("bucketed_tables")
 def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write bucketed copies of lineitem and orders (keyed by orderkey,
     ``N_BUCKETS`` buckets, one file per bucket) and register them in
     the session catalog. Memoized per (session, sf_dir); returns the
     two catalog table names ``(lineitem, orders)``."""
-    key = (spark, sf_dir)
-    if key in _BUCKETED_CACHE:
-        return _BUCKETED_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
-    _t0 = build_start()
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     run = uuid.uuid4().hex[:8]
     base = tempfile.mkdtemp(prefix="trx_bucketed_")
@@ -81,9 +75,7 @@ def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .saveAsTable(name)
         )
         names.append(name)
-    _BUCKETED_CACHE[key] = (names[0], names[1])
-    build_done("bucketed_tables", _t0)
-    return _BUCKETED_CACHE[key]
+    return (names[0], names[1])
 
 
 def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:

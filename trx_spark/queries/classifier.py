@@ -30,31 +30,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memoized
+
 _CLF_ITERS = 10
 _CLF_LR = 1.0
 _BIAS_DIM = -1  # the bias term rides the same (dim, w) table
 
-# trained weights memo per (session, sf_dir)
-_CLF_CACHE: dict = {}
+
 # featurized corpus memo per (session, sf_dir): training builds it
 # once, scoring reuses the same checkpointed frame instead of paying
 # the tokenize + hashed-TF + norm pass a second time
-_FEATS_CACHE: dict = {}
-
-
+@memoized("classifier_features")
 def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, dim, x, y): L1-normalized signed hashed-TF features
     plus the per-doc label (docs with zero tokens emit no rows).
     Checkpointed + memoized per (session, sf_dir)."""
-    key = (spark, sf_dir)
-    if key in _FEATS_CACHE:
-        return _FEATS_CACHE[key]
-    from trx_spark.cache import build_done, build_start
     from trx_spark.queries.curation import _DSIR_TARGET_SOURCE
     from trx_spark.queries.ranking import hashed_tf_features
     from trx_spark.tables import load_table
-
-    _t0 = build_start()
 
     tf = hashed_tf_features(spark, sf_dir)
     norms = tf.groupBy("doc_id").agg(F.sum(F.abs("value")).alias("n1"))
@@ -81,9 +74,7 @@ def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.lit(_BIAS_DIM).cast("long").alias("dim"),
         F.lit(1.0).alias("x"), "y",
     )
-    _FEATS_CACHE[key] = feats.unionByName(bias_rows).localCheckpoint()
-    build_done("classifier_features", _t0)
-    return _FEATS_CACHE[key]
+    return feats.unionByName(bias_rows).localCheckpoint()
 
 
 def _w_df(spark: SparkSession, w: dict) -> DataFrame:
@@ -104,6 +95,8 @@ def _w_df(spark: SparkSession, w: dict) -> DataFrame:
     return spark.sql(f"SELECT * FROM VALUES {rows} AS t(dim, w)")
 
 
+# trained weights memo per (session, sf_dir)
+@memoized("quality_classifier")
 def _train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-batch GD for _CLF_ITERS rounds; returns (dim, w) with the
     bias at dim=_BIAS_DIM.
@@ -123,14 +116,9 @@ def _train(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape paid per round and this one does not: the weight-frame
     localCheckpoint job, the checkpointed-broadcast build job, the
     n_docs crossJoin re-aggregation, and the w⋈grad update subtree."""
-    key = (spark, sf_dir)
-    if key in _CLF_CACHE:
-        return _CLF_CACHE[key]
-    from trx_spark.cache import build_done, build_start
     from trx_spark.queries.ranking import _FH_DIM
 
     feats = _features(spark, sf_dir)
-    _t0 = build_start()
     # bounded scalar (one count job, was re-broadcast every round)
     nd = float(feats.select("doc_id", "y").distinct().count())
 
@@ -163,9 +151,7 @@ def _train(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             # same op order as the former Spark column: w − (lr·g)/nd
             w[int(r["dim"])] = w[int(r["dim"])] - (_CLF_LR * float(g)) / nd
-    _CLF_CACHE[key] = _w_df(spark, w)
-    build_done("quality_classifier", _t0)
-    return _CLF_CACHE[key]
+    return _w_df(spark, w)
 
 
 def quality_classifier_weights(spark: SparkSession, sf_dir: str) -> DataFrame:

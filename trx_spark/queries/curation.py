@@ -33,7 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from trx_spark.tables import load_table
+from trx_spark.cache import memoized
+from trx_spark.tables import fan_out_small_scan, load_table
 
 _TOKEN_RE = "[a-z]+"
 _P = 2147483647  # 2^31 − 1
@@ -58,54 +59,37 @@ _BENCH_MOD = 20
 # Memoize the tokenized base (doc_id, source, toks ARRAY) once per
 # (session, sf_dir); the shingle/bigram/token streams derive from its
 # checkpoint with pure array math, never re-running the regex.
-_TOKS_CACHE: dict = {}
-_SHINGLED_CACHE: dict = {}
-
-
+@memoized("tokenized_base")
 def _toks_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    if key not in _TOKS_CACHE:
-        from trx_spark.cache import timed_build
-        from trx_spark.tables import fan_out_small_scan
-
-        # regex tokenize is map-only — fan the small scan out so it
-        # parallelizes (no-op at cluster scale; tables.py docstring)
-        docs = fan_out_small_scan(load_table(spark, sf_dir, "documents"))
-        toks = F.regexp_extract_all(F.col("text"), F.lit(_TOKEN_RE), 0)
-        with timed_build("tokenized_base"):
-            _TOKS_CACHE[key] = docs.select(
-                "doc_id", "source", toks.alias("toks")
-            ).localCheckpoint()
-    return _TOKS_CACHE[key]
+    # regex tokenize is map-only — fan the small scan out so it
+    # parallelizes (no-op at cluster scale; tables.py docstring)
+    docs = fan_out_small_scan(load_table(spark, sf_dir, "documents"))
+    toks = F.regexp_extract_all(F.col("text"), F.lit(_TOKEN_RE), 0)
+    return docs.select("doc_id", "source", toks.alias("toks")).localCheckpoint()
 
 
+@memoized("shingle_stream")
 def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    if key not in _SHINGLED_CACHE:
-        base = _toks_base(spark, sf_dir)
-        n = F.size(F.col("toks"))
-        # gated on n >= _SHINGLE_N: Spark's sequence(1, 0) is the
-        # DESCENDING [1, 0] (not empty), and slice(toks, 0, k) then
-        # THROWS — a short doc must emit no shingles (the DuckDB
-        # oracle's generate_series(1, 0) is empty), never crash the job
-        shingles = F.when(
-            n >= _SHINGLE_N,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), n - (_SHINGLE_N - 1)),
-                    lambda i: F.array_join(
-                        F.slice(F.col("toks"), i, _SHINGLE_N), " "
-                    ),
-                )
-            ),
-        )
-        from trx_spark.cache import timed_build
-
-        with timed_build("shingle_stream"):
-            _SHINGLED_CACHE[key] = base.select(
-                "doc_id", F.explode(shingles).alias("shingle")
-            ).localCheckpoint()
-    return _SHINGLED_CACHE[key]
+    base = _toks_base(spark, sf_dir)
+    n = F.size(F.col("toks"))
+    # gated on n >= _SHINGLE_N: Spark's sequence(1, 0) is the
+    # DESCENDING [1, 0] (not empty), and slice(toks, 0, k) then
+    # THROWS — a short doc must emit no shingles (the DuckDB
+    # oracle's generate_series(1, 0) is empty), never crash the job
+    shingles = F.when(
+        n >= _SHINGLE_N,
+        F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), n - (_SHINGLE_N - 1)),
+                lambda i: F.array_join(
+                    F.slice(F.col("toks"), i, _SHINGLE_N), " "
+                ),
+            )
+        ),
+    )
+    return base.select(
+        "doc_id", F.explode(shingles).alias("shingle")
+    ).localCheckpoint()
 
 
 # ---------------------------------------------------------------------
@@ -134,36 +118,32 @@ _BLOOM_A2, _BLOOM_B2 = 1103515245, 12345
 # lookups), and rebuilding the bench-side aggregation under each
 # broadcast doubled the query's first-run cost (the r7 bench
 # regression — the aggregation ran once per broadcast instead of once)
-_BLOOM_WORDS_CACHE: dict = {}
-
-
+@memoized("bloom_filter_words")
 def _bloom_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     from trx_spark.queries.textdata import _tok_hash
 
-    key = (spark, sf_dir)
-    if key not in _BLOOM_WORDS_CACHE:
-        sh = _shingled(spark, sf_dir)
-        h1 = _tok_hash(F.col("shingle"))
-        h2 = (h1 * _BLOOM_A2 + _BLOOM_B2) % _P
-        bits = F.explode(
-            F.array((h1 % _BLOOM_BITS), (h2 % _BLOOM_BITS))
-        ).alias("bit")
-        _BLOOM_WORDS_CACHE[key] = (
-            sh.where(F.col("doc_id") % _BENCH_MOD == 0)
-            .select(bits)
-            .select(
-                (F.col("bit") / 32).cast("long").alias("word"),
-                F.expr(
-                    "shiftleft(CAST(1 AS BIGINT), CAST(bit % 32 AS INT))"
-                ).alias("m"),
-            )
-            .groupBy("word")
-            .agg(F.bit_or("m").alias("mask"))
-            .localCheckpoint()
+    sh = _shingled(spark, sf_dir)
+    h1 = _tok_hash(F.col("shingle"))
+    h2 = (h1 * _BLOOM_A2 + _BLOOM_B2) % _P
+    bits = F.explode(
+        F.array((h1 % _BLOOM_BITS), (h2 % _BLOOM_BITS))
+    ).alias("bit")
+    return (
+        sh.where(F.col("doc_id") % _BENCH_MOD == 0)
+        .select(bits)
+        .select(
+            (F.col("bit") / 32).cast("long").alias("word"),
+            F.expr(
+                "shiftleft(CAST(1 AS BIGINT), CAST(bit % 32 AS INT))"
+            ).alias("m"),
         )
-    return _BLOOM_WORDS_CACHE[key]
+        .groupBy("word")
+        .agg(F.bit_or("m").alias("mask"))
+        .localCheckpoint()
+    )
 
 
+@memoized("bloom_masks_lit")
 def _bloom_masks_lit(spark: SparkSession, sf_dir: str) -> str:
     """The packed filter as a DENSE _BLOOM_WORDS-long SQL literal array
     (missing words = 0, the former left-join coalesce(mask, 0)) —
@@ -172,15 +152,10 @@ def _bloom_masks_lit(spark: SparkSession, sf_dir: str) -> str:
     Literal ArrayData, so every probe is a map-side element_at instead
     of two broadcast hash joins per call (the codebook-literal
     discipline, operators/kmeans.py)."""
-    key = (spark, sf_dir, "masks_lit")
-    if key not in _BLOOM_WORDS_CACHE:
-        dense = [0] * _BLOOM_WORDS
-        for r in _bloom_words(spark, sf_dir).collect():
-            dense[int(r["word"])] = int(r["mask"])
-        _BLOOM_WORDS_CACHE[key] = "array({})".format(
-            ", ".join(f"{v}L" for v in dense)
-        )
-    return _BLOOM_WORDS_CACHE[key]
+    dense = [0] * _BLOOM_WORDS
+    for r in _bloom_words(spark, sf_dir).collect():
+        dense[int(r["word"])] = int(r["mask"])
+    return "array({})".format(", ".join(f"{v}L" for v in dense))
 
 
 def decontam_bloom_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -463,43 +438,29 @@ _NGRAM_K = 20
 # bigram) stream; cms_heavy_hitters and dsir_weights the same (doc_id,
 # source, token) stream. Memoize each localCheckpoint per (session,
 # sf_dir) — same pattern as the shingle table above.
-_BIGRAM_CACHE: dict = {}
-_TOKEN_CACHE: dict = {}
-
-
+@memoized("bigram_stream")
 def _bigram_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    if key not in _BIGRAM_CACHE:
-        base = _toks_base(spark, sf_dir)
-        n = F.size(F.col("toks"))
-        # gated on n >= 2 — same sequence(1, 0) footgun as _shingled
-        bigrams = F.when(
-            n >= 2,
-            F.transform(
-                F.sequence(F.lit(1), n - 1),
-                lambda i: F.array_join(F.slice(F.col("toks"), i, 2), " "),
-            ),
-        )
-        from trx_spark.cache import timed_build
-
-        with timed_build("bigram_stream"):
-            _BIGRAM_CACHE[key] = base.select(
-                "doc_id", F.explode(bigrams).alias("ngram")
-            ).localCheckpoint()
-    return _BIGRAM_CACHE[key]
+    base = _toks_base(spark, sf_dir)
+    n = F.size(F.col("toks"))
+    # gated on n >= 2 — same sequence(1, 0) footgun as _shingled
+    bigrams = F.when(
+        n >= 2,
+        F.transform(
+            F.sequence(F.lit(1), n - 1),
+            lambda i: F.array_join(F.slice(F.col("toks"), i, 2), " "),
+        ),
+    )
+    return base.select(
+        "doc_id", F.explode(bigrams).alias("ngram")
+    ).localCheckpoint()
 
 
+@memoized("token_stream")
 def _token_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    if key not in _TOKEN_CACHE:
-        from trx_spark.cache import timed_build
-
-        base = _toks_base(spark, sf_dir)
-        with timed_build("token_stream"):
-            _TOKEN_CACHE[key] = base.select(
-                "doc_id", "source", F.explode(F.col("toks")).alias("token")
-            ).localCheckpoint()
-    return _TOKEN_CACHE[key]
+    base = _toks_base(spark, sf_dir)
+    return base.select(
+        "doc_id", "source", F.explode(F.col("toks")).alias("token")
+    ).localCheckpoint()
 
 
 def topk_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:

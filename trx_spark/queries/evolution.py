@@ -32,16 +32,13 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memoized
 from trx_spark.tables import load_table
 
-_EVO_CACHE: dict = {}
 
-
+@memoized("schema_evo_generations")
 def _staged_generations(spark: SparkSession, sf_dir: str) -> str:
     """Write the two-generation corpus; returns the base directory."""
-    key = (spark, sf_dir)
-    if key in _EVO_CACHE:
-        return _EVO_CACHE[key]
     base = tempfile.mkdtemp(prefix="trx_schema_evo_")
     docs = load_table(spark, sf_dir, "documents")
     gen1 = docs.filter(F.col("doc_id") % 2 == 0).select(
@@ -52,7 +49,6 @@ def _staged_generations(spark: SparkSession, sf_dir: str) -> str:
     )
     gen1.repartition(4).write.mode("overwrite").parquet(f"{base}/gen=1")
     gen2.repartition(4).write.mode("overwrite").parquet(f"{base}/gen=2")
-    _EVO_CACHE[key] = base
     return base
 
 
@@ -93,18 +89,14 @@ FROM merged GROUP BY source
 # Snapshot time-travel diff: the versioned store under the gate
 # ---------------------------------------------------------------------
 
-_SNAP_CACHE: dict = {}
 
-
+@memoized("snapshot_store")
 def _staged_snapshots(spark: SparkSession, sf_dir: str) -> str:
     """Write two customer snapshots into a versioned store (memoized):
     v0 drops every 10th key; v1 drops every 7th key and doubles the
     balance of every 3rd — a deterministic add/remove/change mix."""
     from trx_spark.sources.sinks import save_snapshot
 
-    key = (spark, sf_dir)
-    if key in _SNAP_CACHE:
-        return _SNAP_CACHE[key]
     base = tempfile.mkdtemp(prefix="trx_snap_store_")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_acctbal"
@@ -120,7 +112,6 @@ def _staged_snapshots(spark: SparkSession, sf_dir: str) -> str:
     )
     save_snapshot(v0, base, note="initial load")
     save_snapshot(v1, base, note="monthly refresh")
-    _SNAP_CACHE[key] = base
     return base
 
 

@@ -51,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memoized
 from trx_spark.tables import load_table
 
 _PR_ROUNDS = 6          # fixed iteration budget (unrolled in the oracle)
@@ -62,9 +63,7 @@ _PR_MAX_BASKET = 64     # quadratic guard, same cap as copurchase_lift
 _PR_TOPK = 20
 
 
-_GRAPH_CACHE: dict = {}
-
-
+@memoized("capped_basket_items")
 def capped_basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (l_orderkey, l_partkey) with baskets over
     ``_PR_MAX_BASKET`` distinct parts dropped — the shared spine of
@@ -73,30 +72,22 @@ def capped_basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (session, sf_dir): the pair self-join, the per-part order
     counts and the order total all read the materialized table instead
     of re-running the distinct + basket-size chain."""
-    key = (spark, sf_dir, "items")
-    if key in _GRAPH_CACHE:
-        return _GRAPH_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
-    _t0 = build_start()
     items = (
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
     sized = items.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("_bs"))
-    capped = (
+    return (
         items.join(
             sized.filter(F.col("_bs") <= _PR_MAX_BASKET), "l_orderkey"
         )
         .drop("_bs")
         .localCheckpoint()
     )
-    _GRAPH_CACHE[key] = capped
-    build_done("capped_basket_items", _t0)
-    return capped
 
 
+@memoized("copurchase_pair_counts")
 def copurchase_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src, dst, n_ab): part pairs (src < dst) sharing at least one
     capped basket, with their basket co-occurrence count.  Memoized +
@@ -104,15 +95,9 @@ def copurchase_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct) key set and `copurchase_lift` the counts, so the
     quadratic-in-basket self-join materializes exactly once per
     (session, sf_dir)."""
-    key = (spark, sf_dir, "pairs")
-    if key in _GRAPH_CACHE:
-        return _GRAPH_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
     kept = capped_basket_items(spark, sf_dir)
-    _t0 = build_start()
     a, b = kept.alias("a"), kept.alias("b")
-    counts = (
+    return (
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -125,11 +110,9 @@ def copurchase_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_ab"))
         .localCheckpoint()
     )
-    _GRAPH_CACHE[key] = counts
-    build_done("copurchase_pair_counts", _t0)
-    return counts
 
 
+@memoized("copurchase_graph")
 def _copurchase_graph(spark: SparkSession, sf_dir: str):
     """Symmetric co-purchase graph as (edges, deg): edges = (src, dst,
     outdeg) distinct part pairs sharing an order (both directions, so
@@ -144,9 +127,6 @@ def _copurchase_graph(spark: SparkSession, sf_dir: str):
     consumer.  The deg join is left to AQE: at bench SF it broadcasts
     the node-sized side; at 100 TB both sides are large and it
     degrades to the co-partitioned shuffle join."""
-    key = (spark, sf_dir)
-    if key in _GRAPH_CACHE:
-        return _GRAPH_CACHE[key]
     half = copurchase_pair_counts(spark, sf_dir).select("src", "dst")
     pairs = half.unionAll(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -157,8 +137,7 @@ def _copurchase_graph(spark: SparkSession, sf_dir: str):
         .localCheckpoint()
     )
     edges = pairs.join(deg, "src").localCheckpoint()
-    _GRAPH_CACHE[key] = (edges, deg)
-    return _GRAPH_CACHE[key]
+    return (edges, deg)
 
 
 def pagerank_fixed_point(edges: DataFrame, rounds: int = _PR_ROUNDS) -> DataFrame:

@@ -28,24 +28,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memoized
+
 _LM_VOCAB = 4096  # top-K unigrams kept; the rest fold to UNK
 _LM_UNK = "\x00unk"  # sorts outside [a-z]+, cannot collide with a token
 _LM_K = 0.5  # add-k smoothing mass
 _LM_SCALE = 1e12  # fixed-point scale for the log2 sum (decimal-summed)
 
+
 # trained model memo per (session, sf_dir): (doc_bi_df, uni_df, bi_df)
-_LM_CACHE: dict = {}
-
-
+@memoized("lm_model")
 def _train_lm(spark: SparkSession, sf_dir: str):
     from trx_spark.queries.curation import _bigram_stream, _token_stream
 
-    key = (spark, sf_dir)
-    if key in _LM_CACHE:
-        return _LM_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
-    _t0 = build_start()
     toks = _token_stream(spark, sf_dir)
     vocab = (
         toks.groupBy("token")
@@ -86,9 +81,7 @@ def _train_lm(spark: SparkSession, sf_dir: str):
         .agg(F.count(F.lit(1)).alias("c2"))
         .localCheckpoint()
     )
-    _LM_CACHE[key] = (doc_bi, uni, bi)
-    build_done("lm_model", _t0)
-    return _LM_CACHE[key]
+    return (doc_bi, uni, bi)
 
 
 def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:

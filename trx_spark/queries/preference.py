@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memoized
 from trx_spark.tables import load_table
 
 _BT_ROUNDS = 4          # fixed MM iteration budget (unrolled oracle)
@@ -60,9 +61,11 @@ _BT_MAX_BASKET = 64     # quadratic guard, same cap as copurchase_lift
 _BT_TOPK = 20
 
 
+@memoized("bt_duel_pairs")
 def _duel_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per unordered part pair (ia < ib): duel count n_ij and ia's win
-    count, restricted to the _BT_MAX_ITEMS most-compared items."""
+    count, restricted to the _BT_MAX_ITEMS most-compared items;
+    checkpointed and memoized per (session, sf_dir)."""
     qty = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey", "l_partkey")
@@ -110,7 +113,9 @@ def _duel_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_BT_MAX_ITEMS)
         .collect()
     ]
-    return ps.filter(F.col("ia").isin(keep) & F.col("ib").isin(keep))
+    return ps.filter(
+        F.col("ia").isin(keep) & F.col("ib").isin(keep)
+    ).localCheckpoint()
 
 
 def bt_fit(pk: DataFrame, rounds: int = _BT_ROUNDS) -> DataFrame:
@@ -163,9 +168,6 @@ def bt_fit(pk: DataFrame, rounds: int = _BT_ROUNDS) -> DataFrame:
     )
 
 
-_PK_CACHE: dict = {}
-
-
 def bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-``_BT_TOPK`` items of the fixed-point Bradley–Terry fit over
     co-purchase duels after ``_BT_ROUNDS`` MM rounds.
@@ -174,15 +176,8 @@ def bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     _BT_SCALE, total mass normalized to K·S each round).  The duel
     table (the only data-sized work) is memoized per (session, sf_dir)
     like the other derived structures; the MM rounds re-run."""
-    key = (spark, sf_dir)
-    if key not in _PK_CACHE:
-        from trx_spark.cache import build_done, build_start
-
-        _t0 = build_start()
-        _PK_CACHE[key] = _duel_pairs(spark, sf_dir).localCheckpoint()
-        build_done("bt_duel_pairs", _t0)
     return (
-        bt_fit(_PK_CACHE[key])
+        bt_fit(_duel_pairs(spark, sf_dir))
         .orderBy(F.desc("strength_fp"), F.asc("item"))
         .limit(_BT_TOPK)
     )

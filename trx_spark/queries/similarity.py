@@ -16,6 +16,7 @@ import math as _pymath
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memoized
 from trx_spark.exact import dlit
 from trx_spark.operators.kmeans import (
     _SCALE as _KM_SCALE,
@@ -168,27 +169,21 @@ _N_CELLS = 16
 _N_PROBE = 2
 
 
-_CELLS_ASSIGN_CACHE: dict = {}
-
-
+@memoized("init_cents")
 def _init_cents_lit(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, list[float]]]:
     """The first _N_CELLS vectors as a collected literal codebook
     (bounded: 16 x 64 doubles BY CONSTRUCTION).  Memoized alongside the
     assignment so the probe ranking reuses the same collect."""
-    key = (spark, sf_dir, "init_cents")
-    if key not in _CELLS_ASSIGN_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding"
-        )
-        _CELLS_ASSIGN_CACHE[key] = sorted(
-            (int(r[0]), [float(v) for v in r[1]])
-            for r in emb.filter(F.col("vec_id") < _N_CELLS).collect()
-        )
-    return _CELLS_ASSIGN_CACHE[key]
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return sorted(
+        (int(r[0]), [float(v) for v in r[1]])
+        for r in emb.filter(F.col("vec_id") < _N_CELLS).collect()
+    )
 
 
+@memoized("ivf_cells_assign")
 def _cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Coarse quantizer assignment: centroids are the first _N_CELLS
     vectors (a deterministic stand-in for a trained k-means codebook —
@@ -200,23 +195,15 @@ def _cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     the struct-max tie-break equals the former window's
     ORDER BY dot DESC, cid).  Memoized per (session, sf_dir) — the
     assignment is consumed by ann_ivf_topk and the LSH/IVF composites."""
-    key = (spark, sf_dir)
-    if key in _CELLS_ASSIGN_CACHE:
-        return _CELLS_ASSIGN_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
     cents = _init_cents_lit(spark, sf_dir)
-    _t0 = build_start()
     emb = fan_out_small_scan(
         load_table(spark, sf_dir, "embeddings")
     ).select("vec_id", "embedding")
-    _CELLS_ASSIGN_CACHE[key] = (
+    return (
         assign_literal(emb, cents)
         .select("vec_id", "cid")
         .localCheckpoint()
     )
-    build_done("ivf_cells_assign", _t0)
-    return _CELLS_ASSIGN_CACHE[key]
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -239,7 +226,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _query_vec(spark: SparkSession, sf_dir: str) -> list:
     """The query vector (vec_id 0) collected once per (session,
     sf_dir) — ONE bounded row, shared with the exact re-rank's memo
-    (textdata._Q0_CACHE) so the two never collect it twice."""
+    (the textdata ``q0`` memo) so the two never collect it twice."""
     v = _query_vec0(spark, sf_dir)
     if v is None:
         raise IndexError("embeddings table has no vec_id 0 row")
@@ -329,50 +316,31 @@ _KM_ROUNDS = 2
 # localCheckpoint'ed results per (session, sf_dir), like the trxdomain3
 # curve bank. The codebook is k×dim rows (tiny); what the cache saves
 # is the training passes over the corpus.
-_CENTS_CACHE: dict = {}
-_PQ_CACHE: dict = {}
-_ASSIGN_CACHE: dict = {}
-
-
+@memoized("coarse_codebook")
 def _trained_cents(spark: SparkSession, sf_dir: str) -> list:
     """The Lloyd-trained coarse codebook as a collected literal list
     (k x dim BY CONSTRUCTION — bounded driver state, the pca-moment
     discipline).  Training runs through the literal path: 2 bounded
     collects (init rows + updated centroids), every corpus pass
     map-side.  Bit-identical centroids to the former DataFrame chain."""
-    key = (spark, sf_dir)
-    if key not in _CENTS_CACHE:
-        from trx_spark.cache import build_done, build_start
-
-        _t0 = build_start()
-        emb = fan_out_small_scan(
-            load_table(spark, sf_dir, "embeddings")
-        ).select("vec_id", "embedding")
-        _CENTS_CACHE[key] = lloyd_centroids_collected(
-            emb, k=_N_CELLS, updates=_KM_ROUNDS - 1
-        )
-        build_done("coarse_codebook", _t0)
-    return _CENTS_CACHE[key]
+    emb = fan_out_small_scan(
+        load_table(spark, sf_dir, "embeddings")
+    ).select("vec_id", "embedding")
+    return lloyd_centroids_collected(emb, k=_N_CELLS, updates=_KM_ROUNDS - 1)
 
 
+@memoized("trained_assign")
 def _trained_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every vector's trained cell + dot (vec_id, cid, dot) — ONE
     map-side pass against the literal trained codebook (was: broadcast
     join into an n x k score table + groupBy argmax shuffle), shared by
     kmeans_cells / ann_ivf_trained_topk / ann_ivfpq_topk /
     semantic_dedup / cluster_balanced_sample / contrastive_triples."""
-    key = (spark, sf_dir)
-    if key not in _ASSIGN_CACHE:
-        from trx_spark.cache import build_done, build_start
-
-        cents = _trained_cents(spark, sf_dir)
-        _t0 = build_start()
-        emb = fan_out_small_scan(
-            load_table(spark, sf_dir, "embeddings")
-        ).select("vec_id", "embedding")
-        _ASSIGN_CACHE[key] = assign_literal(emb, cents).localCheckpoint()
-        build_done("trained_assign", _t0)
-    return _ASSIGN_CACHE[key]
+    cents = _trained_cents(spark, sf_dir)
+    emb = fan_out_small_scan(
+        load_table(spark, sf_dir, "embeddings")
+    ).select("vec_id", "embedding")
+    return assign_literal(emb, cents).localCheckpoint()
 
 
 def kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -546,17 +514,10 @@ _SEMDEDUP_CELL_CAP = 256
 # (cell-bounded pair join + distinct — rebuildable, cleared cold):
 # steady-state consumers read the checkpoint instead of re-running the
 # within-cell quadratic join per call (guide §2.1)
-_SEMDEDUP_CACHE: dict = {}
-
-
+@memoized("semdedup_verdicts")
 def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector SemDeDup verdict: trained cell + keep/drop flag.
     Memoized + checkpointed per (session, sf_dir)."""
-    key = (spark, sf_dir)
-    if key in _SEMDEDUP_CACHE:
-        return _SEMDEDUP_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
     emb = fan_out_small_scan(
         load_table(spark, sf_dir, "embeddings")
     ).select("vec_id", "embedding")
@@ -565,7 +526,6 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # kmeans_cells / ann_ivf_trained_topk / contrastive_triples, so a
     # steady-state session skips the corpus x centroid rescoring
     assign = _trained_assign(spark, sf_dir).select("vec_id", "cid")
-    _t0 = build_start()
     # cell sizes: ≤ k rows BY CONSTRUCTION → aggregate + broadcast join
     # (a count window would sort the whole assignment table instead)
     small_cells = (
@@ -596,7 +556,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("_dup", F.lit(1))
     )
-    _SEMDEDUP_CACHE[key] = (
+    return (
         assign.join(dropped, "vec_id", "left")
         .select(
             "vec_id",
@@ -605,8 +565,6 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    build_done("semdedup_verdicts", _t0)
-    return _SEMDEDUP_CACHE[key]
 
 
 _SEMDEDUP_SQL = f"""
@@ -770,6 +728,7 @@ def _pq_update_collect(emb: DataFrame, cents: list) -> list:
     )
 
 
+@memoized("pq_train_encode")
 def _pq_train_encode(spark: SparkSession, sf_dir: str):
     """All subspace codebooks trained through the literal-codebook path
     (2 bounded collects: the k init vectors + the <= M*K*D updated
@@ -778,28 +737,21 @@ def _pq_train_encode(spark: SparkSession, sf_dir: str):
     (session, sf_dir) so pq_codes and ann_pq_topk share one training.
     Returns (cents, codes): the literal list [(m, cid, cent)] and the
     (vec_id, m, cid, dot) frame."""
-    key = (spark, sf_dir)
-    if key not in _PQ_CACHE:
-        from trx_spark.cache import build_done, build_start
-
-        _t0 = build_start()
-        emb = fan_out_small_scan(
-            load_table(spark, sf_dir, "embeddings")
-        ).select("vec_id", "embedding")
-        rows = sorted(
-            (int(r[0]), [float(v) for v in r[1]])
-            for r in emb.filter(F.col("vec_id") < _PQ_K).collect()
-        )
-        init = [
-            (m, cid, vec[m * _PQ_DIM : (m + 1) * _PQ_DIM])
-            for cid, vec in rows
-            for m in range(_PQ_M)
-        ]
-        cents = _pq_update_collect(emb, init)
-        codes = _pq_encode_literal(emb, cents).localCheckpoint()
-        _PQ_CACHE[key] = (cents, codes)
-        build_done("pq_train_encode", _t0)
-    return _PQ_CACHE[key]
+    emb = fan_out_small_scan(
+        load_table(spark, sf_dir, "embeddings")
+    ).select("vec_id", "embedding")
+    rows = sorted(
+        (int(r[0]), [float(v) for v in r[1]])
+        for r in emb.filter(F.col("vec_id") < _PQ_K).collect()
+    )
+    init = [
+        (m, cid, vec[m * _PQ_DIM : (m + 1) * _PQ_DIM])
+        for cid, vec in rows
+        for m in range(_PQ_M)
+    ]
+    cents = _pq_update_collect(emb, init)
+    codes = _pq_encode_literal(emb, cents).localCheckpoint()
+    return (cents, codes)
 
 
 def _pq_adc_df(spark: SparkSession, q: list, cents: list) -> DataFrame:
@@ -1095,7 +1047,6 @@ WHERE rank <= 10
 # ---------------------------------------------------------------------
 
 _OPQ_D = 6  # rotation acts on the PCA'd leading block (embstats._COV_DIMS)
-_OPQ_CACHE: dict = {}
 
 
 def _opq_nrm_text() -> str:
@@ -1114,6 +1065,7 @@ def _opq_u_text(i: int) -> str:
 _OPQ_UD_TEXT = " + ".join(f"u_{i} * x_{i}" for i in range(1, _OPQ_D + 1))
 
 
+@memoized("opq_rotation")
 def _opq_rotated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, embedding): double-array embeddings with the leading
     _OPQ_D coordinates Householder-reflected so the principal
@@ -1121,12 +1073,6 @@ def _opq_rotated(spark: SparkSession, sf_dir: str) -> DataFrame:
     training, encode and ADC table all ride one rotation pass."""
     from trx_spark.queries.embstats import pca_leading_component
 
-    key = (spark, sf_dir)
-    if key in _OPQ_CACHE:
-        return _OPQ_CACHE[key][0]
-    from trx_spark.cache import build_done, build_start
-
-    _t0 = build_start()
     v = pca_leading_component(spark, sf_dir).select(
         *[F.col(f"v_{i}") for i in range(1, _OPQ_D + 1)]
     )
@@ -1150,53 +1096,42 @@ def _opq_rotated(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"transform(slice(embedding, {_OPQ_D + 1}, size(embedding) - {_OPQ_D}), "
         f"t -> CAST(t AS DOUBLE))"
     )
-    rot = j.select(
+    return j.select(
         "vec_id", F.concat(rot_head, tail).alias("embedding")
     ).localCheckpoint()
-    _OPQ_CACHE[key] = (rot,)
-    build_done("opq_rotation", _t0)
-    return rot
 
 
+@memoized("opq_train_encode")
 def _opq_train_encode(spark: SparkSession, sf_dir: str):
     """OPQ twin of _pq_train_encode over the rotated vectors (same
     literal-codebook path: bounded collects of init rows + updated
     centroids, map-side scoring/encode)."""
-    key = (spark, sf_dir)
-    if key not in _OPQ_CACHE or len(_OPQ_CACHE[key]) == 1:
-        from trx_spark.cache import build_done, build_start
-
-        rot = _opq_rotated(spark, sf_dir)
-        _t0 = build_start()
-        rows = sorted(
-            (int(r[0]), [float(v) for v in r[1]])
-            for r in rot.filter(F.col("vec_id") < _PQ_K).collect()
-        )
-        init = [
-            (m, cid, vec[m * _PQ_DIM : (m + 1) * _PQ_DIM])
-            for cid, vec in rows
-            for m in range(_PQ_M)
-        ]
-        cents = _pq_update_collect(rot, init)
-        codes = _pq_encode_literal(rot, cents).localCheckpoint()
-        _OPQ_CACHE[key] = (rot, cents, codes)
-        build_done("opq_train_encode", _t0)
-    return _OPQ_CACHE[key][1:]
+    rot = _opq_rotated(spark, sf_dir)
+    rows = sorted(
+        (int(r[0]), [float(v) for v in r[1]])
+        for r in rot.filter(F.col("vec_id") < _PQ_K).collect()
+    )
+    init = [
+        (m, cid, vec[m * _PQ_DIM : (m + 1) * _PQ_DIM])
+        for cid, vec in rows
+        for m in range(_PQ_M)
+    ]
+    cents = _pq_update_collect(rot, init)
+    codes = _pq_encode_literal(rot, cents).localCheckpoint()
+    return (cents, codes)
 
 
+@memoized("opq_q0")
 def _opq_query_vec(spark: SparkSession, sf_dir: str) -> list:
     """The ROTATED query vector (vec_id 0) collected once per
     (session, sf_dir) — ONE bounded row off the rotation checkpoint."""
-    key = (spark, sf_dir, "q0")
-    if key not in _OPQ_CACHE:
-        row = (
-            _opq_rotated(spark, sf_dir)
-            .filter(F.col("vec_id") == 0)
-            .select("embedding")
-            .collect()
-        )
-        _OPQ_CACHE[key] = [float(v) for v in row[0][0]]
-    return _OPQ_CACHE[key]
+    row = (
+        _opq_rotated(spark, sf_dir)
+        .filter(F.col("vec_id") == 0)
+        .select("embedding")
+        .collect()
+    )
+    return [float(v) for v in row[0][0]]
 
 
 def ann_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1352,9 +1287,7 @@ _KNN_K = 3
 # the edge table is consumed by knn_graph itself AND knn_pagerank —
 # memoize the localCheckpoint per (session, sf_dir) like the LSH bucket
 # table, so the bucket self-join + rank window runs once per session
-_KNN_CACHE: dict = {}
-
-
+@memoized("knn_edges")
 def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed k-nearest-neighbor graph over the embedding corpus —
     the backbone structure for graph-based dedup clustering, label
@@ -1371,12 +1304,6 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (vec_id, nbr_id, cos_sim, knn_rank), ≤ _KNN_K rows per
     vec_id."""
-    key = (spark, sf_dir)
-    if key in _KNN_CACHE:
-        return _KNN_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
-    _t0 = build_start()
     emb = fan_out_small_scan(
         load_table(spark, sf_dir, "embeddings")
     ).select("vec_id", "embedding")
@@ -1418,9 +1345,7 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("knn_rank").cast("int").alias("knn_rank"),
         )
     )
-    _KNN_CACHE[key] = out.localCheckpoint()
-    build_done("knn_edges", _t0)
-    return _KNN_CACHE[key]
+    return out.localCheckpoint()
 
 
 _KNN_SQL = f"""
@@ -2346,20 +2271,13 @@ SELECT vec_id, label, rnd FROM {prev}
 _MRR_QMOD = 97  # eval-query sample: vec_id % _MRR_QMOD == 0
 _MRR_K = 10  # hit@k / ndcg@k cutoff
 
-_RANKED_EVAL_CACHE: dict = {}
 
-
+@memoized("ranked_eval")
 def _ranked_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared retrieval-eval ranking (qid, qlabel, label, rank):
     every non-query vector ranked by exact cosine per sampled query.
     Memoized per (session, sf_dir) — MRR and nDCG score the same
     ranking, so the brute-force leg runs once."""
-    key = (spark, sf_dir)
-    if key in _RANKED_EVAL_CACHE:
-        return _RANKED_EVAL_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
-    _t0 = build_start()
     emb = (
         fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
         .select("vec_id", "embedding", "label")
@@ -2379,13 +2297,9 @@ def _ranked_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.sqrt(F.col("n1") * F.col("qn1")),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    _RANKED_EVAL_CACHE[key] = (
-        scored.select(
-            "qid", "qlabel", "label", F.row_number().over(w).alias("rank")
-        ).localCheckpoint()
-    )
-    build_done("ranked_eval", _t0)
-    return _RANKED_EVAL_CACHE[key]
+    return scored.select(
+        "qid", "qlabel", "label", F.row_number().over(w).alias("rank")
+    ).localCheckpoint()
 
 
 def retrieval_mrr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -38,6 +38,7 @@ import math as _math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memoized
 from trx_spark.exact import dlit
 from trx_spark.queries.curation import _token_stream
 from trx_spark.queries.textdata import _P, _TOKEN_RE, _tok_hash, _tok_hash_sql
@@ -356,37 +357,30 @@ _KMV_K = 128
 _KMV_A, _KMV_B = 16807, 17
 _KMV_UNION_NUM = float((_KMV_K - 1) * _P)  # (K-1)·P, exact in a double
 
-_BIGRAM_SRC_CACHE: dict = {}
 
-
+@memoized("source_bigrams")
 def _source_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (source, bigram) table, memoized per (session, sf_dir):
     the only corpus-sized stage of the KMV query — ~sources·vocab rows
     after the distinct, so everything downstream is bounded."""
-    key = (spark, sf_dir)
-    if key not in _BIGRAM_SRC_CACHE:
-        from trx_spark.queries.curation import _toks_base
+    from trx_spark.queries.curation import _toks_base
 
-        base = _toks_base(spark, sf_dir)
-        n = F.size(F.col("toks"))
-        # gated on n >= 2 — sequence(1, 0) descends in Spark (the
-        # _shingled footgun); DuckDB's range(1, n) is empty there
-        bigrams = F.when(
-            n >= 2,
-            F.transform(
-                F.sequence(F.lit(1), n - 1),
-                lambda i: F.array_join(F.slice(F.col("toks"), i, 2), " "),
-            ),
-        )
-        from trx_spark.cache import timed_build
-
-        with timed_build("source_bigrams"):
-            _BIGRAM_SRC_CACHE[key] = (
-                base.select("source", F.explode(bigrams).alias("token"))
-                .distinct()
-                .localCheckpoint()
-            )
-    return _BIGRAM_SRC_CACHE[key]
+    base = _toks_base(spark, sf_dir)
+    n = F.size(F.col("toks"))
+    # gated on n >= 2 — sequence(1, 0) descends in Spark (the
+    # _shingled footgun); DuckDB's range(1, n) is empty there
+    bigrams = F.when(
+        n >= 2,
+        F.transform(
+            F.sequence(F.lit(1), n - 1),
+            lambda i: F.array_join(F.slice(F.col("toks"), i, 2), " "),
+        ),
+    )
+    return (
+        base.select("source", F.explode(bigrams).alias("token"))
+        .distinct()
+        .localCheckpoint()
+    )
 
 
 def kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:

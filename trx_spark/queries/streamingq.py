@@ -16,6 +16,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memoized
 from trx_spark.queries.relational import _PRICING_SQL
 from trx_spark.streaming.incremental import release_state_stores, run_catchup
 
@@ -703,9 +704,7 @@ FROM documents d JOIN q ON q.doc_id = d.doc_id
 # cleared by cache.py's cold sweep; each gate call still creates its
 # OWN fresh sketch/checkpoint dirs, so the replay itself is never
 # skipped or shared
-_MG_LANDING_CACHE: dict = {}
-
-
+@memoized("mg_landing")
 def _mg_landing(spark: SparkSession, sf_dir: str) -> tuple[str, object]:
     """Land the documents corpus as one parquet file per deterministic
     ``doc_id % B`` batch (one file per batch id keeps the MG merge's
@@ -721,12 +720,6 @@ def _mg_landing(spark: SparkSession, sf_dir: str) -> tuple[str, object]:
 
     from trx_spark.queries.mgsketch import _MG_B
 
-    key = (spark, sf_dir)
-    if key in _MG_LANDING_CACHE:
-        return _MG_LANDING_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
-    _t0 = build_start()
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
@@ -756,9 +749,7 @@ def _mg_landing(spark: SparkSession, sf_dir: str) -> tuple[str, object]:
             ).parquet(tmp)
             part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
             os.rename(part, os.path.join(landing, f"batch_{b}.parquet"))
-    _MG_LANDING_CACHE[key] = (landing, docs.schema)
-    build_done("mg_landing", _t0)
-    return _MG_LANDING_CACHE[key]
+    return (landing, docs.schema)
 
 
 def streaming_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:

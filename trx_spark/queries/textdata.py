@@ -18,6 +18,7 @@ import logging
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memoized
 from trx_spark.tables import fan_out_small_scan, load_table
 
 logger = logging.getLogger(__name__)
@@ -278,21 +279,13 @@ _LSH_BUCKET_CAP = 64
 
 # consumed by the gate query AND dedup_clusters' connected components —
 # memoize the pair table per (session, sf_dir)
-_LSH_PAIRS_CACHE: dict = {}
-
-
+@memoized("lsh_pairs")
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding (4 bands × 2 rows) over the MinHash signatures:
     candidate near-dup pairs = docs sharing any band. The quadratic pair
     search becomes an equi-join on (band, h_even, h_odd), and buckets
     with more than _LSH_BUCKET_CAP members are dropped pre-join (see
     cap note above)."""
-    key = (spark, sf_dir)
-    if key in _LSH_PAIRS_CACHE:
-        return _LSH_PAIRS_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
-    _t0 = build_start()
     # the self-join would recompute the signature lineage on both sides
     # — a local checkpoint materializes the tiny signature table once
     sig = minhash_signatures(spark, sf_dir).localCheckpoint()
@@ -319,9 +312,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    _LSH_PAIRS_CACHE[key] = pairs.localCheckpoint()
-    build_done("lsh_pairs", _t0)
-    return _LSH_PAIRS_CACHE[key]
+    return pairs.localCheckpoint()
 
 
 # The CTE chain ending in ``pairs`` is shared with the connected-
@@ -364,19 +355,11 @@ _JACCARD_MIN = 0.2
 # consumed by the gate query AND lsh_tuning_curve's similarity
 # histogram — memoize the verified pair table per (session, sf_dir) so
 # one bench session builds the shingle self-join once (r11 advice)
-_JACCARD_PAIRS_CACHE: dict = {}
-
-
+@memoized("jaccard_pairs")
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-3-gram Jaccard near-dup pairs: shingle sets per doc, pair
     candidates = docs sharing a shingle (the shingle join IS the
     blocking), J = |∩| / |∪| ≥ 0.2."""
-    key = (spark, sf_dir)
-    if key in _JACCARD_PAIRS_CACHE:
-        return _JACCARD_PAIRS_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
-    _t0 = build_start()
     # identical construction to the AllPairs/MinHash shingle spine —
     # ride the shared checkpointed memo instead of rebuilding it
     sh = _shingle_table(spark, sf_dir)
@@ -401,9 +384,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the pair table is tiny (near-dups only) — checkpoint it so the
     # second consumer in a session skips the shingle self-join entirely
-    _JACCARD_PAIRS_CACHE[key] = out.localCheckpoint()
-    build_done("jaccard_pairs", _t0)
-    return _JACCARD_PAIRS_CACHE[key]
+    return out.localCheckpoint()
 
 
 _JACCARD_SQL = f"""
@@ -453,60 +434,37 @@ _ALLPAIRS_KEY_CAP = 4096  # docs per prefix blocking key before the key
 # the dedup family, not an exact pairwise join.
 
 
-# memoized AllPairs result per (session, sf_dir, key_cap): the exact
-# pair table is the shared truth side of shingle_minhash_recall and a
-# bench sibling of edit-distance style verifies — build it once
-_ALLPAIRS_CACHE: dict = {}
-
 # the distinct (doc_id, shingle) spine both the AllPairs truth build
 # and the MinHash signature table derive from — the tokenize + 3-gram
 # shingle pass is the dominant shared compute, materialized once per
 # (session, sf_dir) (guide §2.1; cleared by cache.py like every memo)
-_SHINGLE_TABLE_CACHE: dict = {}
-
-
+@memoized("shingle_table")
 def _shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct word-3-gram shingles per doc (doc_id, shingle),
     checkpointed + memoized."""
-    key = (spark, sf_dir)
-    if key not in _SHINGLE_TABLE_CACHE:
-        from trx_spark.cache import build_done, build_start
-
-        _t0 = build_start()
-        docs = fan_out_small_scan(load_table(spark, sf_dir, "documents"))
-        toks = docs.select(
-            "doc_id", F.posexplode(_tokens_col()).alias("pos", "t")
-        )
-        w = Window.partitionBy("doc_id").orderBy("pos")
-        _SHINGLE_TABLE_CACHE[key] = (
-            toks.withColumn("t1", F.lead("t", 1).over(w))
-            .withColumn("t2", F.lead("t", 2).over(w))
-            .filter(F.col("t2").isNotNull())
-            .select(
-                "doc_id", F.concat_ws(" ", "t", "t1", "t2").alias("shingle")
-            )
-            .distinct()
-            .localCheckpoint()
-        )
-        build_done("shingle_table", _t0)
-    return _SHINGLE_TABLE_CACHE[key]
+    docs = fan_out_small_scan(load_table(spark, sf_dir, "documents"))
+    toks = docs.select("doc_id", F.posexplode(_tokens_col()).alias("pos", "t"))
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    return (
+        toks.withColumn("t1", F.lead("t", 1).over(w))
+        .withColumn("t2", F.lead("t", 2).over(w))
+        .filter(F.col("t2").isNotNull())
+        .select("doc_id", F.concat_ws(" ", "t", "t1", "t2").alias("shingle"))
+        .distinct()
+        .localCheckpoint()
+    )
 
 
+# memoized AllPairs result per (session, sf_dir, key_cap): the exact
+# pair table is the shared truth side of shingle_minhash_recall and a
+# bench sibling of edit-distance style verifies — build it once
+@memoized("allpairs_truth")
 def allpairs_jaccard_join(
     spark: SparkSession, sf_dir: str, *, key_cap: int = _ALLPAIRS_KEY_CAP
 ) -> DataFrame:
     """Memoizing wrapper over :func:`_allpairs_jaccard_join_build`
     (the algorithm and its guarantees are documented there)."""
-    key = (spark, sf_dir, key_cap)
-    if key not in _ALLPAIRS_CACHE:
-        from trx_spark.cache import build_done, build_start
-
-        _t0 = build_start()
-        _ALLPAIRS_CACHE[key] = _allpairs_jaccard_join_build(
-            spark, sf_dir, key_cap
-        ).localCheckpoint()
-        build_done("allpairs_truth", _t0)
-    return _ALLPAIRS_CACHE[key]
+    return _allpairs_jaccard_join_build(spark, sf_dir, key_cap).localCheckpoint()
 
 
 def _allpairs_jaccard_join_build(
@@ -714,7 +672,33 @@ _SHMH_BANDS = 4  # 4 bands x 2 rows over the 8-permutation family
 # the result is a doc-keyed 9-column table the cold pass can always
 # rebuild — the same derived-structure discipline as the LSH bucket
 # and AllPairs truth memos it joins against
-_SHMH_SIGS_CACHE: dict = {}
+@memoized("shmh_signatures")
+def _shmh_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def _affine(a, b):
+        return lambda x: (F.lit(a) * x + F.lit(b)) % _P
+
+    # derive the signatures from the SAME checkpointed (doc_id,
+    # shingle) table the AllPairs truth build materializes (the
+    # shared shingle spine): MinHash is a min over the shingle-id
+    # SET, so 8 partial-aggregatable MIN aggregates over the
+    # exploded rows equal the former per-doc array fold — without
+    # re-paying the tokenize + 3-gram shingle pass this query's
+    # truth side just built (guide §2.1 shared derived structure)
+    sh = _shingle_table(spark, sf_dir)
+    hid = _tok_hash(F.col("shingle"))
+    aggs = [
+        F.min(_affine(a, b)(hid)).alias(f"mh{j}")
+        for j, (a, b) in enumerate(_MINHASH_COEF)
+    ]
+    return (
+        sh.groupBy("doc_id")
+        .agg(*aggs)
+        # materialize ONCE: both join sides below read this frame,
+        # and without the checkpoint Catalyst plans two independent
+        # subtrees that each re-run the signature pass (the plan's
+        # two BroadcastExchanges each fed by their own scan)
+        .localCheckpoint()
+    )
 
 
 def _shingle_ids_col():
@@ -748,39 +732,7 @@ def shingle_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = allpairs_jaccard_join(spark, sf_dir).select(
         "doc_a", "doc_b", "jaccard"
     )
-    key = (spark, sf_dir)
-    if key not in _SHMH_SIGS_CACHE:
-        from trx_spark.cache import build_done, build_start
-
-        _t0 = build_start()
-
-        def _affine(a, b):
-            return lambda x: (F.lit(a) * x + F.lit(b)) % _P
-
-        # derive the signatures from the SAME checkpointed (doc_id,
-        # shingle) table the AllPairs truth build materializes (the
-        # shared shingle spine): MinHash is a min over the shingle-id
-        # SET, so 8 partial-aggregatable MIN aggregates over the
-        # exploded rows equal the former per-doc array fold — without
-        # re-paying the tokenize + 3-gram shingle pass this query's
-        # truth side just built (guide §2.1 shared derived structure)
-        sh = _shingle_table(spark, sf_dir)
-        hid = _tok_hash(F.col("shingle"))
-        aggs = [
-            F.min(_affine(a, b)(hid)).alias(f"mh{j}")
-            for j, (a, b) in enumerate(_MINHASH_COEF)
-        ]
-        _SHMH_SIGS_CACHE[key] = (
-            sh.groupBy("doc_id")
-            .agg(*aggs)
-            # materialize ONCE: both join sides below read this frame,
-            # and without the checkpoint Catalyst plans two independent
-            # subtrees that each re-run the signature pass (the plan's
-            # two BroadcastExchanges each fed by their own scan)
-            .localCheckpoint()
-        )
-        build_done("shmh_signatures", _t0)
-    sigs = _SHMH_SIGS_CACHE[key]
+    sigs = _shmh_signatures(spark, sf_dir)
     a = sigs.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"mh{j}").alias(f"a{j}") for j in range(8)],
@@ -1095,22 +1047,14 @@ _PLANE_COEF = [(2654435761, 40503), (2246822519, 30089), (3266489917, 20021),
 # ann_topk_multiprobe, embedding_neardup_pairs) — memoize the
 # localCheckpoint per (session, sf_dir) so the 8-plane scoring runs
 # once per bench/driver session
-_LSH_BUCKET_TABLE_CACHE: dict = {}
-
-
+@memoized("lsh_bucket_table")
 def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH bucket per embedding: 8 deterministic
     integer hyperplanes (components derived arithmetically from the
     position index -> oracle-exact); bucket = sign-bit vector of the dot
     products. The scale path for similarity search: candidate pairs are
     an equi-join on bucket instead of a cross join."""
-    key = (spark, sf_dir)
-    if key in _LSH_BUCKET_TABLE_CACHE:
-        return _LSH_BUCKET_TABLE_CACHE[key]
-    from trx_spark.cache import build_done, build_start
     from trx_spark.exact import dsum
-
-    _t0 = build_start()
 
     emb = fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
     ex = (
@@ -1141,9 +1085,7 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = dots.select(
         "vec_id", sum(bits[1:], bits[0]).alias("bucket")
     )
-    _LSH_BUCKET_TABLE_CACHE[key] = bucket.localCheckpoint()
-    build_done("lsh_bucket_table", _t0)
-    return _LSH_BUCKET_TABLE_CACHE[key]
+    return bucket.localCheckpoint()
 
 
 def _plane_sql(j: int, a: int, b: int) -> str:
@@ -1263,20 +1205,15 @@ _PROBE_MASKS = (
 # every ANN consumer re-ranks against the same ONE bounded row, so the
 # collect is a shared derived value like the codebooks (None = the
 # table has no vec 0; rebuilt cold like every memo — cache.py)
-_Q0_CACHE: dict = {}
-
-
+@memoized("q0")
 def _query_vec0(spark: SparkSession, sf_dir: str) -> list | None:
-    key = (spark, sf_dir)
-    if key not in _Q0_CACHE:
-        rows = (
-            load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") == 0)
-            .select("embedding")
-            .collect()
-        )
-        _Q0_CACHE[key] = [float(v) for v in rows[0][0]] if rows else None
-    return _Q0_CACHE[key]
+    rows = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") == 0)
+        .select("embedding")
+        .collect()
+    )
+    return [float(v) for v in rows[0][0]] if rows else None
 
 
 # sentinel: distinguishes "caller did not pass q0" (collect it here)
@@ -1450,22 +1387,14 @@ _VERIFY_JACCARD_MIN = 0.5
 # (doc_a, doc_b, n_inter, n_a, n_b) per candidate pair — shared by the
 # Jaccard verifier and the containment scorer (one token explode, one
 # intersection join, one checkpoint for both)
-_PAIR_STATS_CACHE: dict = {}
-
-
+@memoized("pair_token_stats")
 def _pair_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-token intersection statistics over the memoized LSH
     candidate pairs: (doc_a, doc_b, n_inter, n_a, n_b). The verifier
     (exact Jaccard) and the containment scorer (Broder c(A→B)) are
     both pure arithmetic over this frame — the intersection machinery
     exists ONCE in each engine."""
-    key = (spark, sf_dir)
-    if key in _PAIR_STATS_CACHE:
-        return _PAIR_STATS_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
     pairs = minhash_lsh_pairs(spark, sf_dir)
-    _t0 = build_start()
     tok = (
         fan_out_small_scan(load_table(spark, sf_dir, "documents"))
         .select("doc_id", F.explode(F.array_distinct(_tokens_col())).alias("t"))
@@ -1487,9 +1416,7 @@ def _pair_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(sizes.withColumnRenamed("n_sh", "n_b"), F.col("doc_b") == F.col("doc_id"))
         .drop("doc_id")
     )
-    _PAIR_STATS_CACHE[key] = out.localCheckpoint()
-    build_done("pair_token_stats", _t0)
-    return _PAIR_STATS_CACHE[key]
+    return out.localCheckpoint()
 
 
 def lsh_pairs_verified(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -40,10 +40,10 @@ import string
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memoized
+
 _WP_VOCAB = 128  # top-K corpus words kept as whole pieces
 _WP_MAXLEN = 20  # BERT's max_input_chars_per_word rule → UNK
-
-_WP_CACHE: dict = {}
 
 
 def _wp_fold_expr(vocab: list[str], word_col: str = "word") -> str:
@@ -71,34 +71,28 @@ def _wp_fold_expr(vocab: list[str], word_col: str = "word") -> str:
     )
 
 
+@memoized("wordpiece_vocab")
 def _wp_vocab(spark: SparkSession, sf_dir: str) -> list[str]:
     """Top-_WP_VOCAB words by (freq DESC, word ASC) ∪ the 26 single
     characters — a bounded (≤154-row) driver read that becomes the
     matcher's inlined array literal."""
     from trx_spark.queries.curation import _token_stream
 
-    key = (spark, sf_dir)
-    if key not in _WP_CACHE:
-        from trx_spark.cache import build_done, build_start
-
-        _t0 = build_start()
-        top = (
-            _token_stream(spark, sf_dir)
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .orderBy(F.desc("c"), F.asc("token"))
-            .limit(_WP_VOCAB)
-            .collect()
-        )
-        vocab = sorted({r["token"] for r in top} | set(string.ascii_lowercase))
-        # the no-match NULL in _wp_fold_expr is defensive; with the
-        # token alphabet fully covered by single-char pieces it is
-        # unreachable, and this guard keeps that true if _TOKEN_RE or
-        # the vocab construction ever changes
-        assert set(string.ascii_lowercase) <= set(vocab), "vocab must cover [a-z]"
-        _WP_CACHE[key] = vocab
-        build_done("wordpiece_vocab", _t0)
-    return _WP_CACHE[key]
+    top = (
+        _token_stream(spark, sf_dir)
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .orderBy(F.desc("c"), F.asc("token"))
+        .limit(_WP_VOCAB)
+        .collect()
+    )
+    vocab = sorted({r["token"] for r in top} | set(string.ascii_lowercase))
+    # the no-match NULL in _wp_fold_expr is defensive; with the
+    # token alphabet fully covered by single-char pieces it is
+    # unreachable, and this guard keeps that true if _TOKEN_RE or
+    # the vocab construction ever changes
+    assert set(string.ascii_lowercase) <= set(vocab), "vocab must cover [a-z]"
+    return vocab
 
 
 def wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -199,9 +193,6 @@ GROUP BY t.doc_id
 
 _WPT_MERGES = 6  # likelihood merge rounds (static unroll, mirrored in SQL)
 
-# trained state memo per (session, sf_dir): (merges_df, words_df)
-_WPT_CACHE: dict = {}
-
 
 def _sym_counts(words: DataFrame) -> DataFrame:
     """(sym, c): freq-weighted symbol occurrences over the current
@@ -217,15 +208,11 @@ def _sym_counts(words: DataFrame) -> DataFrame:
     )
 
 
+# trained state memo per (session, sf_dir): (merges_df, words_df)
+@memoized("wordpiece_trained")
 def _wpt_train(spark: SparkSession, sf_dir: str):
     from trx_spark.queries.bpe import _APPLY_MERGE_EXPR, _word_freq, _pair_counts
 
-    key = (spark, sf_dir)
-    if key in _WPT_CACHE:
-        return _WPT_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
-    _t0 = build_start()
     words = _word_freq(spark, sf_dir).select(
         "word",
         "freq",
@@ -283,9 +270,7 @@ def _wpt_train(spark: SparkSession, sf_dir: str):
     merges = merge_rows[0]
     for m in merge_rows[1:]:
         merges = merges.unionByName(m)
-    _WPT_CACHE[key] = (merges.localCheckpoint(), words)
-    build_done("wordpiece_trained", _t0)
-    return _WPT_CACHE[key]
+    return (merges.localCheckpoint(), words)
 
 
 def wordpiece_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from trx_spark.cache import memoized
 from trx_spark.tables import load_table
 
 DOC_SCHEMA = T.StructType(
@@ -133,36 +134,30 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
 # Gate queries: roundtrip documents through each format + quarantine
 # ---------------------------------------------------------------------
 
-_STAGE_CACHE: dict = {}
-
 _CORRUPT_JSONL = '{"doc_id": 9999999, "text": "truncated...\n'
 _CORRUPT_CSV = "not-a-bigint,only,two\n"
 _CORRUPT_XML = "<docs><doc><doc_id>not-a-bigint</doc_id></doc></docs>\n"
 
 
+@memoized("textio_staged")
 def _staged(spark: SparkSession, sf_dir: str, fmt: str) -> str:
     """Write the documents table as fmt shards once per (session,
     sf_dir), then append one malformed line in an extra shard file."""
-    key = (spark, sf_dir, fmt)
-    if key not in _STAGE_CACHE:
-        tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-        path = os.path.join(
-            tempfile.gettempdir(), "trx_spark_textio", f"{tag}_{fmt}"
-        )
-        docs = load_table(spark, sf_dir, "documents")
-        writers = {
-            "jsonl": (write_jsonl, _CORRUPT_JSONL, "part-corrupt.txt"),
-            "csv": (write_csv, _CORRUPT_CSV, "part-corrupt.txt"),
-            "xml": (write_xml, _CORRUPT_XML, "part-corrupt.xml"),
-            "orc": (write_orc, None, None),
-        }
-        writer, corrupt, fname = writers[fmt]
-        writer(docs, path, n_shards=4)
-        if corrupt is not None:
-            with open(os.path.join(path, fname), "w") as fh:
-                fh.write(corrupt)
-        _STAGE_CACHE[key] = path
-    return _STAGE_CACHE[key]
+    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    path = os.path.join(tempfile.gettempdir(), "trx_spark_textio", f"{tag}_{fmt}")
+    docs = load_table(spark, sf_dir, "documents")
+    writers = {
+        "jsonl": (write_jsonl, _CORRUPT_JSONL, "part-corrupt.txt"),
+        "csv": (write_csv, _CORRUPT_CSV, "part-corrupt.txt"),
+        "xml": (write_xml, _CORRUPT_XML, "part-corrupt.xml"),
+        "orc": (write_orc, None, None),
+    }
+    writer, corrupt, fname = writers[fmt]
+    writer(docs, path, n_shards=4)
+    if corrupt is not None:
+        with open(os.path.join(path, fname), "w") as fh:
+            fh.write(corrupt)
+    return path
 
 
 def _ingest_stats(df: DataFrame) -> DataFrame:

@@ -39,6 +39,9 @@ under the driver's DuckDB oracle.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -167,16 +170,16 @@ def make_curation_batch_handler(
         # results, so overlap them (guide §2.6): each leg's jobs
         # back-fill executor slots the other leg's tail leaves idle.
         # Frames, gating and writes are exactly the sequential ones —
-        # only the submission order changed.
+        # only the submission order changed.  Each leg inherits this
+        # thread's local properties, so its jobs stay in the
+        # microbatch's job group and cancelling the query stops them.
         first_new = None
         ok = None
         seen = None
         if do_hash and do_band:
-            from concurrent.futures import ThreadPoolExecutor
-
             with ThreadPoolExecutor(max_workers=2) as pool:
-                f_hash = pool.submit(_hash_leg)
-                f_band = pool.submit(_band_leg)
+                f_hash = pool.submit(inheritable_thread_target(spark)(_hash_leg))
+                f_band = pool.submit(inheritable_thread_target(spark)(_band_leg))
                 first_new = f_hash.result()
                 ok, seen = f_band.result()
         elif do_hash:
@@ -262,11 +265,9 @@ def make_curation_batch_handler(
             )
 
         if do_hash and do_band:
-            from concurrent.futures import ThreadPoolExecutor
-
             with ThreadPoolExecutor(max_workers=2) as pool:
-                fh = pool.submit(_append_hashes)
-                fb = pool.submit(_append_bands)
+                fh = pool.submit(inheritable_thread_target(spark)(_append_hashes))
+                fb = pool.submit(inheritable_thread_target(spark)(_append_bands))
                 fh.result()
                 fb.result()
         elif do_hash:
