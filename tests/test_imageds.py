@@ -146,3 +146,26 @@ def test_datasource_missing_path_option_raises(spark):
     register_image_datasource(spark)
     with pytest.raises(Exception, match="path"):
         spark.read.format("detector_image").load().count()
+
+
+def test_package_zip_ignores_stale_pid_file(tmp_path, monkeypatch):
+    """The shipped package zip is built fresh: a leftover zip of older
+    code at the per-PID temp path (PIDs recycle) is never reused."""
+    import os
+    import pathlib
+    import tempfile
+    import zipfile
+
+    from trx_spark.operators import multimodal
+    from trx_spark.sources import imageds
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    stale = tmp_path / f"trx_spark_pkg_{os.getpid()}.zip"
+    with zipfile.ZipFile(stale, "w") as zf:
+        zf.writestr("trx_spark/operators/multimodal.py", "# stale code\n")
+    # drop a per-process cache of the zip, if any, so the build runs here
+    getattr(imageds._package_zip, "cache_clear", lambda: None)()
+    shipped = imageds._package_zip()
+    with zipfile.ZipFile(shipped) as zf:
+        got = zf.read("trx_spark/operators/multimodal.py")
+    assert got == pathlib.Path(multimodal.__file__).read_bytes()

@@ -1273,7 +1273,7 @@ def test_decode_png_distributed(spark, tmp_path):
 
 
 def test_decode_png_distributed_adam7(spark):
-    """decode_image's self-contained PNG twin decodes Adam7-interlaced
+    """decode_image's distributed path decodes Adam7-interlaced
     blobs too (parity with decode_png / the census path): sequential
     and interlaced encodings of the same pixels give identical
     distributed luma sums."""
@@ -1612,7 +1612,7 @@ def test_jpeg_progressive_restart_resync():
 
 def test_decode_jpeg_distributed_progressive(spark):
     """decode_image(codec='auto') decodes progressive JPEGs in the
-    distributed pixel pipeline too: the twin's SOF2 branch imports the
+    distributed pixel pipeline too: the distributed path imports the
     real decoder via the shipped package zip, so baseline and
     progressive blobs of the same image give identical luma sums."""
     import numpy as np
@@ -1649,11 +1649,11 @@ def test_decode_jpeg_distributed_progressive(spark):
     assert got == expect
 
 
-def test_decode_image_ships_package_for_jpeg(spark, monkeypatch):
-    """decode_image(codec='jpeg'/'auto') must invoke the executor
-    package shipping (the SOF2 escape hatch depends on it) — local-mode
+def test_decode_image_ships_package(spark, monkeypatch):
+    """Every decode_image call must invoke the executor package
+    shipping (its kernel imports the module codecs) — local-mode
     workers resolve `import trx_spark` from the cwd, so the distributed
-    progressive test alone cannot catch a dropped shipping call."""
+    tests alone cannot catch a dropped shipping call."""
     import numpy as np
 
     from trx_spark.operators import multimodal
@@ -1667,9 +1667,10 @@ def test_decode_image_ships_package_for_jpeg(spark, monkeypatch):
         [("a.jpg", bytearray(multimodal.encode_jpeg(np.zeros((8, 8)))))],
         "path string, content binary",
     )
-    for codec, expected in (("jpeg", 1), ("auto", 2), ("png", 2)):
+    codecs = [*multimodal.DECODERS, "auto", "fake"]
+    for k, codec in enumerate(codecs, 1):
         multimodal.decode_image(assets, codec=codec)
-        assert len(calls) == expected, codec
+        assert len(calls) == k, codec
     # restart_interval validation: clear errors, not OverflowError
     import pytest as _pt
 
@@ -1777,6 +1778,64 @@ def test_all_codec_truncation_contract():
                 pass  # the documented contract
         # the untruncated blob still decodes (guards didn't over-reach)
         dec(bytes(blob))
+
+
+def test_distributed_codec_truncation_contract(spark):
+    """The truncation contract holds on the distributed path too:
+    decode_image on a truncated TIFF, Bruker and mar345 blob fails the
+    Spark job with the codecs' ValueError — never a KeyError or
+    IndexError from the parse layer."""
+    import re
+
+    from trx_spark.operators import multimodal as M
+
+    rng = np.random.default_rng(5)
+    rng.integers(0, 1000, (6, 5))  # same draws as the local contract test
+    sq = rng.integers(0, 1000, (8, 8)).astype(np.int64)
+    tiff = M.encode_tiff(rng.integers(0, 255, (5, 4)).astype(np.uint8))
+    mar = M.encode_mar345(sq)
+    cases = {
+        "tiff": tiff[:55],
+        "bruker": M.encode_bruker(sq)[:554],
+        "mar345": mar[: len(mar) - 5],
+    }
+    for codec, blob in cases.items():
+        assets = spark.createDataFrame(
+            [(f"cut.{codec}", bytearray(blob))], "path string, content binary"
+        )
+        with pytest.raises(Exception) as info:
+            M.decode_image(assets, codec=codec).collect()
+        # the error the kernel raised is the last Python exception line
+        # of the worker traceback (earlier ones are its cause chain)
+        raised = re.findall(r"^(\w+(?:Error|Exception)):", str(info.value), re.M)
+        assert raised and raised[-1] == "ValueError", (codec, raised)
+
+
+def test_no_byte_parsing_in_nested_functions():
+    """Byte parsing lives only in the module codecs: no function nested
+    inside another function in multimodal.py (a worker kernel or a
+    helper closure) calls ``frombuffer`` or ``decompress`` — kernels
+    import the module codecs instead of carrying a copy of one."""
+    import ast
+    import pathlib
+
+    from trx_spark.operators import multimodal
+
+    tree = ast.parse(pathlib.Path(multimodal.__file__).read_text())
+    funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
+    hits = set()  # nested functions that parse bytes, as name:line
+    for outer in ast.walk(tree):
+        if not isinstance(outer, funcs):
+            continue
+        for inner in ast.walk(outer):
+            if inner is outer or not isinstance(inner, funcs):
+                continue
+            for call in ast.walk(inner):
+                fn = getattr(call, "func", None)
+                name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", "")
+                if isinstance(call, ast.Call) and name in ("frombuffer", "decompress"):
+                    hits.add(f"{inner.name}:{inner.lineno}")
+    assert not hits, sorted(hits)
 
 
 def test_decode_jpeg_distributed(spark, tmp_path):
@@ -1940,7 +1999,7 @@ def test_wav_g711_companded_roundtrip():
 
 def test_wav_g711_distributed(spark, tmp_path):
     """Companded WAV through the distributed audio feature path: the
-    nested twin's G.711 tables match the module tables exactly."""
+    distributed path's G.711 tables match the module tables exactly."""
     import numpy as np
 
     from trx_spark.operators.multimodal import (
@@ -2002,7 +2061,7 @@ def test_tiff_packbits_roundtrip_and_distributed(spark, tmp_path):
             encode_tiff(noisy, byte_order=order, compression=32773)
         )
         np.testing.assert_array_equal(back, noisy)
-    # distributed: the nested twin decompresses identically
+    # the distributed path decompresses identically
     (tmp_path / "pb_0.tif").write_bytes(encode_tiff(noisy, compression=32773))
     assets = read_binary_assets(spark, str(tmp_path / "pb_*.tif"), "image")
     px = decode_image(assets, codec="tiff").toPandas().sort_values(["y", "x"])
@@ -2017,7 +2076,7 @@ def test_tiff_lzw_roundtrip_and_distributed(spark, tmp_path):
     independently of the encoder; roundtrips cross the 9→10→11 bit
     boundaries and the KwKwK self-reference; predictor 2 (horizontal
     differencing) roundtrips and actually compresses a smooth ramp;
-    the distributed twin decodes identically."""
+    the distributed path decodes identically."""
     import numpy as np
 
     from trx_spark.operators.multimodal import (

@@ -19,7 +19,13 @@ by content hash) with the real schema, partitioning and batch shape.
 Scale design: ``spark.read.format("binaryFile")`` gives (path, content)
 with pushdown on path globs; one input row fans out to H·W pixel rows
 inside mapInPandas (no driver involvement, no shuffle); downstream is
-the integrate_1d groupBy.
+the integrate_1d groupBy. There is one copy of each codec: the worker
+kernels (:func:`decode_image`, :func:`decode_video`,
+:func:`audio_frame_features`, :func:`image_census`) import the codecs
+from this module on the worker, and every call that builds such a
+kernel ships the package to the executors
+(:func:`trx_spark.sources.imageds.ensure_executor_package`), so
+workers resolve the import from any driver cwd.
 """
 
 from __future__ import annotations
@@ -209,29 +215,17 @@ def sniff_codec(buf: bytes) -> str:
 def decode_any(buf: bytes) -> tuple[np.ndarray, dict]:
     """gunzip-if-needed + sniff + dispatch → (first frame, header)."""
     buf = maybe_gunzip(buf)
-    fmt = sniff_codec(buf)
-    if fmt == "edf":
-        return decode_edf(buf)
-    if fmt == "cbf":
-        return decode_cbf(buf)
-    if fmt == "mar345":
-        return decode_mar345(buf)
-    if fmt == "marccd":
-        return decode_marccd(buf)
-    if fmt == "bruker":
-        return decode_bruker(buf)
-    if fmt == "adsc":
-        return decode_adsc(buf)
-    if fmt == "png":
-        return decode_png(buf)
-    if fmt == "jpeg":
-        return decode_jpeg(buf)
-    if fmt == "avi":
-        frames, hdr = decode_avi_frames(buf)
-        img, _ = decode_jpeg(frames[0])
-        return img, hdr
-    img, tags = decode_tiff(buf)
-    return img, {str(k): v for k, v in tags.items()}
+    return decoder_for(sniff_codec(buf))(buf)
+
+
+def decoder_for(fmt: str):
+    """The :data:`DECODERS` entry for ``fmt``; a format without one
+    (e.g. a doubly gzipped blob sniffed as ``"gzip"``) raises the
+    decode contract's ``ValueError``."""
+    try:
+        return DECODERS[fmt]
+    except KeyError:
+        raise ValueError(f"no decoder for format {fmt!r}") from None
 
 
 # ---------------------------------------------------------------------
@@ -259,51 +253,51 @@ _CBF_ELEM_TYPES = {
 }
 
 
-def _byte_offset_unpack(raw: bytes, n: int, _np=np) -> np.ndarray:
+def _byte_offset_unpack(raw: bytes, n: int) -> np.ndarray:
     """byte_offset stream → int64 pixel vector of length ``n``."""
-    buf = _np.frombuffer(raw, dtype=_np.uint8)
-    deltas = _np.empty(n, dtype=_np.int64)
+    buf = np.frombuffer(raw, dtype=np.uint8)
+    deltas = np.empty(n, dtype=np.int64)
     # all candidate escape-marker positions computed ONCE; markers
     # consumed inside escape payloads are skipped by searchsorted, so
     # each escape costs O(log m) instead of a full O(n) rescan (the
     # rescan made escape-dense images effectively quadratic)
-    marks = _np.flatnonzero(buf == 0x80)
+    marks = np.flatnonzero(buf == 0x80)
     i = 0  # byte cursor
     k = 0  # pixel cursor
     while k < n:
-        m = int(_np.searchsorted(marks, i))
+        m = int(np.searchsorted(marks, i))
         nxt = int(marks[m]) if m < marks.size else buf.size
         j = min(nxt - i, n - k)
         if j:
             # run of plain 1-byte deltas up to the next escape marker
-            deltas[k : k + j] = buf[i : i + j].view(_np.int8)
+            deltas[k : k + j] = buf[i : i + j].view(np.int8)
             i += j
             k += j
             if k >= n:
                 break
         # widening escape at buf[i]
-        v = int(_np.frombuffer(raw, dtype="<i2", count=1, offset=i + 1)[0])
+        v = int(np.frombuffer(raw, dtype="<i2", count=1, offset=i + 1)[0])
         i += 3
         if v == -32768:
-            v = int(_np.frombuffer(raw, dtype="<i4", count=1, offset=i)[0])
+            v = int(np.frombuffer(raw, dtype="<i4", count=1, offset=i)[0])
             i += 4
             if v == -2147483648:
-                v = int(_np.frombuffer(raw, dtype="<i8", count=1, offset=i)[0])
+                v = int(np.frombuffer(raw, dtype="<i8", count=1, offset=i)[0])
                 i += 8
         deltas[k] = v
         k += 1
-    return _np.cumsum(deltas)
+    return np.cumsum(deltas)
 
 
-def _byte_offset_pack(values: np.ndarray, _np=np) -> bytes:
+def _byte_offset_pack(values: np.ndarray) -> bytes:
     """int pixel vector → byte_offset stream (inverse of unpack)."""
-    d = _np.diff(values.astype(_np.int64), prepend=_np.int64(0))
+    d = np.diff(values.astype(np.int64), prepend=np.int64(0))
     small = (d >= -127) & (d <= 127)
     parts = []
     prev = 0
-    for j in _np.flatnonzero(~small):
+    for j in np.flatnonzero(~small):
         j = int(j)
-        parts.append(d[prev:j].astype(_np.int8).tobytes())
+        parts.append(d[prev:j].astype(np.int8).tobytes())
         v = int(d[j])
         if -32767 <= v <= 32767:
             parts.append(b"\x80" + v.to_bytes(2, "little", signed=True))
@@ -314,7 +308,7 @@ def _byte_offset_pack(values: np.ndarray, _np=np) -> bytes:
                 b"\x80\x00\x80\x00\x00\x00\x80" + v.to_bytes(8, "little", signed=True)
             )
         prev = j + 1
-    parts.append(d[prev:].astype(_np.int8).tobytes())
+    parts.append(d[prev:].astype(np.int8).tobytes())
     return b"".join(parts)
 
 
@@ -479,8 +473,7 @@ def decode_image(
     assets: DataFrame,
     *,
     shape: tuple[int, int] = (32, 32),
-    codec: str | None = None,
-    real_codec: bool = False,
+    codec: str = "fake",
 ) -> DataFrame:
     """binary image → pixel rows via mapInPandas (U1: 1 file → H·W rows;
     a multi-frame EDF stack fans out to one row-set per frame, keyed by
@@ -491,881 +484,80 @@ def decode_image(
     before decode for every real codec.
 
     ``codec``:
-      - ``"edf"`` — REAL decode of the reference's detector format
-        (pure-numpy :func:`decode_edf`; the reference goes through
-        fabio, trx/azav.py:29-34, whose default beamline output is EDF).
-      - ``"cbf"`` — REAL decode of the imgCIF byte_offset format
-        (pure-numpy :func:`decode_cbf`; fabio's other beamline format,
-        trx/azav.py:29-47).
-      - ``"tiff"`` — REAL decode of baseline uncompressed TIFF
-        (pure-numpy :func:`decode_tiff`; the third fabio format).
-      - ``"mar345"`` — REAL decode of the marresearch image-plate
-        format (pure-numpy :func:`decode_mar345`: CCP4 PCK bit stream
-        + overflow table; fabio's mar345 surface).
-      - ``"marccd"`` — REAL decode of the MarCCD detector format
-        (TIFF container + frame header at 1024, pixels through the
-        spec-certain TIFF path; fabio's mccd surface).
-      - ``"bruker"`` — REAL decode of the Bruker SFRM frame format
-        (80-char keyed header records + ASCII overflow table;
-        fabio's bruker surface).
-      - ``"adsc"`` — REAL decode of the ADSC Quantum SMV format
-        (padded ``{key=value;}`` ASCII header + raw uint16 pixels;
-        fabio's adsc surface).
-      - ``"png"`` — REAL decode of PNG (pure numpy + zlib
-        :func:`decode_png`; color images reduce to the integer
-        Rec.601 luma plane, :func:`png_luma`) — the web-corpus image
-        format of the training-data brief.
-      - ``"jpeg"`` — REAL decode of baseline JPEG (pure numpy
-        :func:`decode_jpeg`: Huffman entropy decode, dequantize, exact
-        8x8 IDCT, chroma upsample, BT.601 color; 4:2:0/4:2:2/4:4:4 and
-        DRI restarts; progressive/SOF2 rides the real module via the
-        shipped package zip) — the other web-corpus
-        format. Every image format this engine claims is now decoded
-        for real.
-      - ``"auto"`` — per-file magic-byte sniffing across the real
-        formats (fabio's auto-detection behavior: a real beamline
-        folder mixes formats).
+      - any key of :data:`DECODERS` — REAL decode through that module
+        codec: ``"edf"`` (every frame of the stack,
+        :func:`decode_edf_frames`; the reference goes through fabio,
+        trx/azav.py:29-34, whose default beamline output is EDF),
+        ``"cbf"``, ``"tiff"`` (baseline, PackBits, LZW),
+        ``"mar345"``, ``"marccd"``, ``"bruker"``, ``"adsc"``,
+        ``"png"`` (sequential and Adam7), ``"jpeg"`` (baseline and
+        progressive) and ``"avi"`` (first MJPEG frame; use
+        :func:`decode_video` for the stream). Color images reduce to
+        the integer Rec.601 luma plane (:func:`png_luma`).
+      - ``"auto"`` — per-file magic-byte sniffing (:func:`sniff_codec`,
+        fabio's auto-detection behavior: a real beamline folder mixes
+        formats).
       - ``"fake"`` (default) — deterministic intensity pattern seeded by
         the content hash: same schema/partitioning/batch shape, stable
         golden values, for schema-level plumbing tests and synthetic
         benchmarks that need no codec at all.
-    ``real_codec=True`` is the former spelling of ``codec="edf"``.
+
+    The kernel imports the codecs from this module on the worker, so
+    every call ships the package to the executors
+    (:func:`trx_spark.sources.imageds.ensure_executor_package`,
+    idempotent per context) and workers resolve it from any driver
+    cwd. Malformed input raises the codecs' ``ValueError``.
     """
+    from trx_spark.sources.imageds import ensure_executor_package
+
     ny, nx = shape
-    codec = codec or ("edf" if real_codec else "fake")
-    if codec not in (
-        "edf", "cbf", "tiff", "mar345", "marccd", "bruker", "adsc",
-        "png", "jpeg", "auto", "fake",
-    ):
+    if codec not in {*DECODERS, "auto", "fake"}:
         raise ValueError(f"unknown codec {codec!r}")
-    if codec in ("jpeg", "auto"):
-        # real-module escape hatch for the one format without a
-        # self-contained twin (progressive JPEG): ship the package zip
-        # once per context so the twin's SOF2 branch can import it.
-        # Best-effort on purpose: an environment without a classic
-        # SparkContext (Spark Connect) keeps the twins' full baseline
-        # coverage, and only a progressive file hits the SOF2 branch's
-        # instructive error.
-        from trx_spark.sources.imageds import ensure_executor_package
-
-        # Spark Connect has no classic sparkContext (accessing it raises
-        # PySparkAttributeError, an AttributeError subclass, so getattr
-        # returns the default) — twins keep full baseline coverage
-        # there.  With a classic context, ANY shipping failure (zip
-        # build error, addPyFile permission — including bugs that
-        # themselves raise AttributeError) must stay diagnosable
-        # instead of resurfacing later as the SOF2 branch's "package
-        # missing" error.
-        if getattr(assets.sparkSession, "sparkContext", None) is not None:
-            try:
-                ensure_executor_package(assets.sparkSession)
-            except Exception as exc:  # pragma: no cover - cluster-only
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "executor package shipping failed (progressive-JPEG "
-                    "decode will need trx_spark importable on "
-                    "executors): %s",
-                    exc,
-                )
-    tiff_type_size = dict(_TIFF_TYPE_SIZE)
-    edf_dtypes = dict(_EDF_DTYPES)  # plain dict → pickled by value
-    cbf_elem_types = dict(_CBF_ELEM_TYPES)
-    cbf_magic = bytes(_CBF_MAGIC)
-    cbf_section = bytes(_CBF_SECTION)
-
-    def _parse_edf(buf, _np):
-        # nested (pickled by value) twin of decode_edf_frames: worker
-        # kernels must not reference trx_spark module symbols —
-        # executors may not have the repo on their import path.
-        # Returns the full frame stack (multi-frame EDF = successive
-        # header+payload blocks, reference stacks 3-D at azav.py:42-46).
-        frames = []
-        pos, n_buf = 0, len(buf)
-        while pos < n_buf:
-            while pos < n_buf and buf[pos : pos + 1] in (b" ", b"\r", b"\n", b"\t", b"\x00"):
-                pos += 1
-            if pos >= n_buf or buf[pos : pos + 1] != b"{":
-                break
-            end = buf.index(b"}", pos)
-            fields = {}
-            for line in buf[pos : end + 1].decode("ascii", "replace").strip("{} \r\n").split(";"):
-                if "=" in line:
-                    k, v = line.split("=", 1)
-                    fields[k.strip()] = v.strip()
-            nx_, ny_ = int(fields["Dim_1"]), int(fields["Dim_2"])
-            dt = _np.dtype(edf_dtypes[fields.get("DataType", "UnsignedShort")])
-            order = "<" if fields.get("ByteOrder", "LowByteFirst") == "LowByteFirst" else ">"
-            dt = dt.newbyteorder(order)
-            start = buf.index(b"}\n", pos) + 2
-            img = _np.frombuffer(buf, dtype=dt, count=nx_ * ny_, offset=start)
-            frames.append(img.reshape(ny_, nx_))
-            pos = start + nx_ * ny_ * dt.itemsize
-        if not frames:
-            raise ValueError("no EDF frame found")
-        return frames
-
-    def _parse_cbf(buf, _np):
-        # nested (pickled by value) twin of decode_cbf — see _parse_edf
-        sec = buf.index(cbf_section)
-        mark = buf.index(cbf_magic, sec)
-        fields = {}
-        for line in buf[sec:mark].decode("ascii", "replace").splitlines():
-            if ":" in line:
-                k, v = line.split(":", 1)
-                fields[k.strip()] = v.strip()
-        nx_ = int(fields["X-Binary-Size-Fastest-Dimension"])
-        ny_ = int(fields["X-Binary-Size-Second-Dimension"])
-        n = nx_ * ny_
-        raw = buf[mark + len(cbf_magic) :]
-        dt0 = cbf_elem_types.get(
-            fields.get("X-Binary-Element-Type", '"signed 32-bit integer"'), "i4"
-        )
-        if b"x-CBF_BYTE_OFFSET" not in buf[sec:mark]:
-            if b"x-CBF_NONE" in buf[sec:mark]:
-                # uncompressed little-endian elements (plain-CIF variant)
-                flat = _np.frombuffer(
-                    raw, dtype=_np.dtype(dt0).newbyteorder("<"), count=n
-                )
-                return flat.astype(_np.dtype(dt0)).reshape(ny_, nx_)
-            raise ValueError("unsupported CBF conversions")
-        u8 = _np.frombuffer(raw, dtype=_np.uint8)
-        deltas = _np.empty(n, dtype=_np.int64)
-        # marker index computed once; searchsorted skips markers inside
-        # consumed escape payloads (see _byte_offset_unpack)
-        marks = _np.flatnonzero(u8 == 0x80)
-        i = k = 0
-        while k < n:
-            m = int(_np.searchsorted(marks, i))
-            nxt = int(marks[m]) if m < marks.size else u8.size
-            j = min(nxt - i, n - k)
-            if j:
-                deltas[k : k + j] = u8[i : i + j].view(_np.int8)
-                i += j
-                k += j
-                if k >= n:
-                    break
-            v = int(_np.frombuffer(raw, dtype="<i2", count=1, offset=i + 1)[0])
-            i += 3
-            if v == -32768:
-                v = int(_np.frombuffer(raw, dtype="<i4", count=1, offset=i)[0])
-                i += 4
-                if v == -2147483648:
-                    v = int(_np.frombuffer(raw, dtype="<i8", count=1, offset=i)[0])
-                    i += 8
-            deltas[k] = v
-            k += 1
-        return _np.cumsum(deltas).astype(_np.dtype(dt0)).reshape(ny_, nx_)
-
-    def _parse_mar345(buf, _np):
-        # nested (pickled by value) twin of decode_mar345 — see
-        # _parse_edf for why worker kernels stay self-contained
-        pck_bits = (0, 4, 5, 6, 7, 8, 16, 32)
-        for order in ("<", ">"):
-            if int(_np.frombuffer(buf, dtype=f"{order}i4", count=1)[0]) == 1234:
-                break
-        else:
-            raise ValueError("not a mar345 stream")
-        words = _np.frombuffer(buf, dtype=f"{order}i4", count=6)
-        size, nhigh, fmt = int(words[1]), int(words[2]), int(words[3])
-        if fmt != 1:
-            raise ValueError("unsupported mar345 format word")
-        pos = 4096
-        high = _np.frombuffer(
-            buf, dtype=f"{order}i4", count=2 * nhigh, offset=pos
-        ).reshape(nhigh, 2)
-        pos += 8 * nhigh
-        marker = ("\nCCP4 packed image, X: %04d, Y: %04d\n" % (size, size)).encode()
-        raw = buf[buf.index(marker, pos) + len(marker) :]
-        n = size * size
-        out = _np.empty(n, dtype=_np.int64)
-        acc = nbits = bpos = k = 0
-        while k < n:
-            while nbits < 6:
-                acc |= raw[bpos] << nbits
-                bpos += 1
-                nbits += 8
-            blocklen = 1 << (acc & 7)
-            bits = pck_bits[(acc >> 3) & 7]
-            acc >>= 6
-            nbits -= 6
-            for _ in range(blocklen):
-                if bits:
-                    while nbits < bits:
-                        acc |= raw[bpos] << nbits
-                        bpos += 1
-                        nbits += 8
-                    v = acc & ((1 << bits) - 1)
-                    acc >>= bits
-                    nbits -= bits
-                    if v >= 1 << (bits - 1):
-                        v -= 1 << bits
-                else:
-                    v = 0
-                if k < n:
-                    out[k] = v
-                k += 1
-        img = _np.zeros(n, dtype=_np.int64)
-        img[:size] = _np.cumsum(out[:size])
-        for i in range(size, n):
-            nw = img[i - size - 1] if i > size else img[i - 1]
-            pred = (
-                img[i - 1] + img[i - size + 1] + img[i - size] + nw + 2
-            ) >> 2
-            img[i] = out[i] + pred
-        img = img.reshape(size, size)
-        for addr, val in high:
-            img.flat[int(addr) - 1] = int(val)
-        return img
-
-    def _parse_tiff(buf, _np):
-        # nested (pickled by value) twin of decode_tiff — see _parse_edf
-        bo = {b"II": "<", b"MM": ">"}.get(buf[:2])
-        end = "little" if bo == "<" else "big"
-        ifd_off = int.from_bytes(buf[4:8], end)
-        n = int.from_bytes(buf[ifd_off : ifd_off + 2], end)
-        tags = {}
-        for k in range(n):
-            e = ifd_off + 2 + 12 * k
-            tag = int.from_bytes(buf[e : e + 2], end)
-            typ = int.from_bytes(buf[e + 2 : e + 4], end)
-            cnt = int.from_bytes(buf[e + 4 : e + 8], end)
-            size = tiff_type_size.get(typ, 1) * cnt
-            if size <= 4:
-                body = buf[e + 8 : e + 8 + size]
-            else:
-                off = int.from_bytes(buf[e + 8 : e + 12], end)
-                body = buf[off : off + size]
-            w = tiff_type_size.get(typ, 1)
-            tags[tag] = [int.from_bytes(body[i : i + w], end) for i in range(0, size, w)]
-        comp = tags.get(259, [1])[0]
-        if comp not in (1, 5, 32773):
-            raise ValueError("unsupported TIFF compression")
-        nx_, ny_ = tags[256][0], tags[257][0]
-        bits = tags.get(258, [8])[0]
-        kind = {1: "u", 2: "i", 3: "f"}[tags.get(339, [1])[0]]
-        strips = [buf[o : o + c] for o, c in zip(tags[273], tags[279])]
-        if comp == 32773:  # PackBits (twin of _packbits_decode)
-            dec = []
-            for s in strips:
-                out_b = bytearray()
-                i2, n2 = 0, len(s)
-                while i2 < n2:
-                    cb = s[i2]
-                    i2 += 1
-                    if cb < 128:
-                        out_b += s[i2 : i2 + cb + 1]
-                        i2 += cb + 1
-                    elif cb > 128:
-                        out_b += s[i2 : i2 + 1] * (257 - cb)
-                        i2 += 1
-                dec.append(bytes(out_b))
-            strips = dec
-        elif comp == 5:  # TIFF LZW (twin of _lzw_decode)
-            dec = []
-            for s in strips:
-                out_b = bytearray()
-                acc = nb = pos2 = 0
-                width = 9
-                tab = [bytes([i]) for i in range(256)] + [b"", b""]
-                prev = None
-                while True:
-                    while nb < width:
-                        if pos2 >= len(s):
-                            break
-                        acc = (acc << 8) | s[pos2]
-                        pos2 += 1
-                        nb += 8
-                    if nb < width:
-                        break
-                    code = (acc >> (nb - width)) & ((1 << width) - 1)
-                    nb -= width
-                    if code == 256:
-                        tab = [bytes([i]) for i in range(256)] + [b"", b""]
-                        width = 9
-                        prev = None
-                        continue
-                    if code == 257:
-                        break
-                    if prev is None:
-                        entry = tab[code]
-                    elif code < len(tab):
-                        entry = tab[code]
-                        tab.append(prev + entry[:1])
-                    elif code == len(tab):
-                        entry = prev + prev[:1]
-                        tab.append(entry)
-                    else:
-                        raise ValueError("corrupt TIFF LZW stream")
-                    out_b += entry
-                    prev = entry
-                    if len(tab) >= (1 << width) - 2 and width < 12:
-                        width += 1
-                dec.append(bytes(out_b))
-            strips = dec
-        data = b"".join(strips)
-        img_t = _np.frombuffer(
-            data, dtype=_np.dtype(f"{bo}{kind}{bits // 8}"), count=nx_ * ny_
-        ).reshape(ny_, nx_)
-        if tags.get(317, [1])[0] == 2:
-            if kind != "u":
-                raise ValueError("TIFF predictor 2 supported for unsigned only")
-            img_t = (
-                _np.cumsum(img_t.astype(_np.int64), axis=1) % (1 << bits)
-            ).astype(img_t.dtype)
-        return img_t
-
-    def _parse_bruker(buf, _np):
-        # nested (pickled by value) twin of decode_bruker — see
-        # _parse_edf for why worker kernels stay self-contained
-        def _items(nblk):
-            out = {}
-            for off in range(0, nblk * 512, 80):
-                line = buf[off : off + 80].decode("ascii", "replace")
-                key, val = line[:7].strip(), line[8:].strip()
-                if key and key not in out:
-                    out[key] = val
-            return out
-
-        hdrblks = int(_items(1).get("HDRBLKS", "3").split()[0])
-        items = _items(hdrblks)
-        nrows = int(items["NROWS"].split()[0])
-        ncols = int(items["NCOLS"].split()[0])
-        npixelb_fields = [int(x) for x in items["NPIXELB"].split()]
-        npixelb = npixelb_fields[0]
-        version = int(items.get("VERSION", "0").split()[0])
-        nov = [int(x) for x in items.get("NOVERFL", "0").split()]
-        if int(items.get("WORDORD", "0").split()[0]) != 0:
-            raise ValueError("unsupported SFRM word order (little-endian only)")
-        pos = hdrblks * 512
-        n = nrows * ncols
-        img = _np.frombuffer(
-            buf, dtype=f"<u{npixelb}", count=n, offset=pos
-        ).astype(_np.int64).reshape(nrows, ncols)
-        pos += n * npixelb
-        if version >= 11:
-            if len(nov) < 3:
-                raise ValueError(
-                    "SFRM VERSION>=11 requires a 3-field NOVERFL; got "
-                    + items.get("NOVERFL", "")
-                )
-            nunder, nov2, nov4 = nov[:3]
-            if npixelb > 2 and (nov2 > 0 or nov4 > 0):
-                raise ValueError("4-byte SFRM pixels cannot carry overflow tables")
-            if nunder >= 0:
-                ub = npixelb_fields[1] if len(npixelb_fields) > 1 else 1
-                pos += -(-(nunder * ub) // 16) * 16
-            flat = img.reshape(-1)
-            if nov2 > 0:
-                idx2 = (
-                    _np.flatnonzero(flat == 0xFF)
-                    if npixelb == 1
-                    else _np.array([], dtype=_np.int64)
-                )
-                if idx2.size != nov2:
-                    raise ValueError(
-                        f"SFRM 2-byte overflow count {nov2} does not match "
-                        f"{idx2.size} saturated pixels"
-                    )
-                flat[idx2] = _np.frombuffer(buf, dtype="<u2", count=nov2, offset=pos)
-                pos += -(-(2 * nov2) // 16) * 16
-            if nov4 > 0:
-                idx4 = _np.flatnonzero(flat == 0xFFFF)
-                if idx4.size != nov4:
-                    raise ValueError(
-                        f"SFRM 4-byte overflow count {nov4} does not match "
-                        f"{idx4.size} saturated pixels"
-                    )
-                flat[idx4] = _np.frombuffer(buf, dtype="<u4", count=nov4, offset=pos)
-        else:
-            for k in range(nov[0]):
-                rec = buf[pos + 16 * k : pos + 16 * (k + 1)].decode("ascii")
-                img.flat[int(rec[9:16])] = int(rec[:9])
-        return img
-
-    def _parse_adsc(buf, _np):
-        # nested (pickled by value) twin of decode_adsc — see
-        # _parse_edf for why worker kernels stay self-contained
-        end = buf.index(b"}")
-        fields = {}
-        for line in buf[: end + 1].decode("ascii", "replace").strip("{} \r\n").splitlines():
-            line = line.strip().rstrip(";")
-            if "=" in line:
-                k, v = line.split("=", 1)
-                fields[k.strip()] = v.strip()
-        nx_ = int(fields["SIZE1"])
-        ny_ = int(fields["SIZE2"])
-        order = "<" if fields.get("BYTE_ORDER", "little_endian") == "little_endian" else ">"
-        typ = fields.get("TYPE", "unsigned_short")
-        types = {"unsigned_short": "u2", "unsigned_long": "u4", "signed_short": "i2"}
-        if typ not in types:
-            raise ValueError(f"unsupported SMV TYPE {typ!r}")
-        kind = types[typ]
-        return _np.frombuffer(
-            buf, dtype=f"{order}{kind}", count=nx_ * ny_,
-            offset=int(fields["HEADER_BYTES"]),
-        ).reshape(ny_, nx_)
-
-    def _parse_png(buf, _np, _zlib):
-        # nested (pickled by value) twin of decode_png + png_luma — see
-        # _parse_edf for why worker kernels stay self-contained.
-        # Returns the 2-D integer luma plane (the pixel pipeline's
-        # intensity column is scalar per (y, x)).
-        pos, n_buf = 8, len(buf)
-        ihdr = None
-        plte = None
-        idat = []
-        while pos + 8 <= n_buf:
-            ln = int.from_bytes(buf[pos : pos + 4], "big")
-            typ = buf[pos + 4 : pos + 8]
-            data = buf[pos + 8 : pos + 8 + ln]
-            crc = int.from_bytes(buf[pos + 8 + ln : pos + 12 + ln], "big")
-            if _zlib.crc32(typ + data) != crc:
-                raise ValueError(f"PNG chunk {typ!r} CRC mismatch")
-            pos += 12 + ln
-            if typ == b"IHDR":
-                ihdr = (
-                    int.from_bytes(data[0:4], "big"),
-                    int.from_bytes(data[4:8], "big"),
-                    data[8], data[9], data[10], data[11], data[12],
-                )
-            elif typ == b"PLTE":
-                plte = _np.frombuffer(data, dtype=_np.uint8).reshape(-1, 3)
-            elif typ == b"IDAT":
-                idat.append(data)
-            elif typ == b"IEND":
-                break
-        if ihdr is None or not idat:
-            raise ValueError("PNG missing IHDR or IDAT")
-        width, height, depth, ctype, comp, filt, interlace = ihdr
-        if comp != 0 or filt != 0 or interlace not in (0, 1):
-            raise ValueError("unsupported PNG compression/filter/interlace")
-        channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-        if ctype not in channels:
-            raise ValueError(f"unsupported PNG color type {ctype}")
-        if depth not in (8, 16) or (ctype == 3 and depth != 8):
-            raise ValueError(f"unsupported PNG bit depth {depth}")
-        ch = channels[ctype]
-        bpp = ch * (depth // 8)
-        raw = _zlib.decompress(b"".join(idat))
-
-        def unfilter(seg, hgt, strd):
-            out = _np.zeros((hgt, strd), dtype=_np.uint8)
-            p = 0
-            for r in range(hgt):
-                ft = seg[p]
-                line = _np.frombuffer(
-                    seg, dtype=_np.uint8, count=strd, offset=p + 1
-                ).astype(_np.int64)
-                p += 1 + strd
-                prev = (
-                    out[r - 1].astype(_np.int64)
-                    if r
-                    else _np.zeros(strd, dtype=_np.int64)
-                )
-                if ft == 0:
-                    rec = line
-                elif ft == 1:
-                    rec = line.copy()
-                    for c in range(bpp):
-                        rec[c::bpp] = _np.cumsum(rec[c::bpp]) & 0xFF
-                elif ft == 2:
-                    rec = (line + prev) & 0xFF
-                elif ft == 3:
-                    rec = _np.empty(strd, dtype=_np.int64)
-                    for i in range(strd):
-                        left = rec[i - bpp] if i >= bpp else 0
-                        rec[i] = (line[i] + ((left + prev[i]) >> 1)) & 0xFF
-                elif ft == 4:
-                    rec = _np.empty(strd, dtype=_np.int64)
-                    for i in range(strd):
-                        a = rec[i - bpp] if i >= bpp else 0
-                        b = prev[i]
-                        c = prev[i - bpp] if i >= bpp else 0
-                        pp = a + b - c
-                        pa, pb, pc = abs(pp - a), abs(pp - b), abs(pp - c)
-                        pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                        rec[i] = (line[i] + pr) & 0xFF
-                else:
-                    raise ValueError(f"bad PNG filter type {ft}")
-                out[r] = rec.astype(_np.uint8)
-            return out
-
-        def to_samples(mat, hgt, wdt):
-            if depth == 16:
-                pairs = mat.reshape(hgt, wdt, ch, 2).astype(_np.int64)
-                return (pairs[..., 0] << 8) | pairs[..., 1]
-            return mat.reshape(hgt, wdt, ch).astype(_np.int64)
-
-        if interlace == 1:
-            # Adam7: 7 independently-filtered sub-images on the fixed
-            # 8x8 grid (twin of decode_png's pass loop)
-            img = _np.zeros((height, width, ch), dtype=_np.int64)
-            pos2 = 0
-            for x0, y0, dx, dy in (
-                (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-                (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-            ):
-                pw = -(-(width - x0) // dx) if width > x0 else 0
-                phh = -(-(height - y0) // dy) if height > y0 else 0
-                if pw <= 0 or phh <= 0:
-                    continue
-                need = phh * (pw * bpp + 1)
-                if pos2 + need > len(raw):
-                    raise ValueError("PNG pixel data size mismatch")
-                img[y0::dy, x0::dx] = to_samples(
-                    unfilter(raw[pos2 : pos2 + need], phh, pw * bpp),
-                    phh, pw,
-                )
-                pos2 += need
-            if pos2 != len(raw):
-                raise ValueError("PNG pixel data size mismatch")
-        else:
-            stride = width * bpp
-            if len(raw) != height * (stride + 1):
-                raise ValueError("PNG pixel data size mismatch")
-            img = to_samples(unfilter(raw, height, stride), height, width)
-        if ctype == 3:
-            if plte is None:
-                raise ValueError("palette PNG missing PLTE chunk")
-            img = plte[img[..., 0]].astype(_np.int64)
-            ch = 3
-        if ch == 1:
-            return img[..., 0]
-        if ch == 2:
-            return img[..., 0]
-        return (299 * img[..., 0] + 587 * img[..., 1] + 114 * img[..., 2]) // 1000
-
-    def _parse_jpeg(buf, _np):
-        # nested (pickled by value) twin of decode_jpeg + png_luma —
-        # see _parse_edf for why worker kernels stay self-contained.
-        # Returns the 2-D integer luma plane.
-        zzo = _np.array([
-            0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-            12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-            35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-            58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-        ])
-        basis = _np.array([
-            [(_np.sqrt(0.5) if u == 0 else 1.0) / 2.0
-             * _np.cos((2 * x + 1) * u * _np.pi / 16.0) for x in range(8)]
-            for u in range(8)
-        ])
-
-        def canonical(bits, vals):
-            dec = {}
-            code = k = 0
-            for length in range(1, 17):
-                for _ in range(bits[length - 1]):
-                    dec[(length, code)] = vals[k]
-                    code += 1
-                    k += 1
-                code <<= 1
-            return dec
-
-        n = len(buf)
-        i = 2
-        qts, huffs = {}, {}
-        frame = None
-        dri = 0
-        scan = None
-        while i < n - 1:
-            if buf[i] != 0xFF:
-                i += 1
-                continue
-            m = buf[i + 1]
-            if m in (0xD8, 0x01) or 0xD0 <= m <= 0xD7:
-                i += 2
-                continue
-            if m == 0xD9:
-                break
-            ln = int.from_bytes(buf[i + 2 : i + 4], "big")
-            seg = buf[i + 4 : i + 2 + ln]
-            if m == 0xDB:
-                p = 0
-                while p < len(seg):
-                    pq, tq = seg[p] >> 4, seg[p] & 15
-                    if pq == 0:
-                        qts[tq] = _np.frombuffer(
-                            seg[p + 1 : p + 65], dtype=_np.uint8
-                        ).astype(_np.int64)
-                        p += 65
-                    else:
-                        qts[tq] = _np.frombuffer(
-                            seg[p + 1 : p + 129], dtype=">u2"
-                        ).astype(_np.int64)
-                        p += 129
-            elif m == 0xC4:
-                p = 0
-                while p < len(seg):
-                    cls, tid = seg[p] >> 4, seg[p] & 15
-                    bits = list(seg[p + 1 : p + 17])
-                    cnt = sum(bits)
-                    huffs[(cls, tid)] = canonical(
-                        bits, list(seg[p + 17 : p + 17 + cnt])
-                    )
-                    p += 17 + cnt
-            elif m in (0xC0, 0xC1):
-                hgt = int.from_bytes(seg[1:3], "big")
-                wid = int.from_bytes(seg[3:5], "big")
-                comps = [
-                    (seg[6 + 3 * c], seg[7 + 3 * c] >> 4,
-                     seg[7 + 3 * c] & 15, seg[8 + 3 * c])
-                    for c in range(seg[5])
-                ]
-                frame = (hgt, wid, comps)
-            elif m == 0xC2:
-                # progressive: no self-contained twin (the scan loop
-                # is ~200 lines) — use the real decoder, importable on
-                # executors because decode_image ships the package zip
-                # (ensure_executor_package / --py-files); the twin
-                # keeps handling the baseline path so it stays
-                # exercised
-                try:
-                    from trx_spark.operators.multimodal import (
-                        _decode_jpeg_progressive,
-                    )
-                except ImportError:
-                    raise ValueError(
-                        "progressive JPEG needs the trx_spark package "
-                        "on executors (addPyFile / --py-files)"
-                    )
-                img, _hdr = _decode_jpeg_progressive(bytes(buf))
-                if img.ndim == 2:
-                    return img
-                return (
-                    299 * img[..., 0] + 587 * img[..., 1]
-                    + 114 * img[..., 2]
-                ) // 1000
-            elif 0xC3 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):
-                raise ValueError(
-                    f"unsupported JPEG SOF marker 0xff{m:02x} "
-                    "(baseline/progressive only)"
-                )
-            elif m == 0xDD:
-                dri = int.from_bytes(seg[:2], "big")
-            elif m == 0xDA:
-                smap = {
-                    seg[1 + 2 * c]: (seg[2 + 2 * c] >> 4, seg[2 + 2 * c] & 15)
-                    for c in range(seg[0])
-                }
-                scan = (smap, i + 2 + ln)
-                break
-            i += 2 + ln
-        if frame is None or scan is None:
-            raise ValueError("JPEG missing SOF/SOS")
-        hgt, wid, comps = frame
-        smap, dpos = scan
-        data = bytearray()
-        rst_at = []
-        j = dpos
-        while j < n:
-            b = buf[j]
-            if b == 0xFF:
-                nxt = buf[j + 1] if j + 1 < n else 0
-                if nxt == 0x00:
-                    data.append(0xFF)
-                    j += 2
-                    continue
-                if 0xD0 <= nxt <= 0xD7:
-                    rst_at.append(len(data))
-                    j += 2
-                    continue
-                break
-            data.append(b)
-            j += 1
-        data = bytes(data)
-        hmax = max(c[1] for c in comps)
-        vmax = max(c[2] for c in comps)
-        mcux, mcuy = -(-wid // (8 * hmax)), -(-hgt // (8 * vmax))
-        planes = [
-            _np.zeros((mcuy * 8 * c[2], mcux * 8 * c[1]), dtype=_np.float64)
-            for c in comps
-        ]
-        pos = [0, 0, 0]  # byte index, bit accumulator, bits held
-
-        def bit():
-            if pos[2] == 0:
-                if pos[0] >= len(data):
-                    raise ValueError("JPEG entropy stream truncated")
-                pos[1] = data[pos[0]]
-                pos[0] += 1
-                pos[2] = 8
-            pos[2] -= 1
-            return (pos[1] >> pos[2]) & 1
-
-        def bits(k):
-            v = 0
-            for _ in range(k):
-                v = (v << 1) | bit()
-            return v
-
-        def huff(table):
-            code = 0
-            for length in range(1, 17):
-                code = (code << 1) | bit()
-                if (length, code) in table:
-                    return table[(length, code)]
-            raise ValueError("invalid JPEG huffman code")
-
-        def extend(v, s):
-            return v if s == 0 or v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-        preds = [0] * len(comps)
-        rk = 0
-        mcu_count = 0
-        for my in range(mcuy):
-            for mx in range(mcux):
-                if dri and mcu_count and mcu_count % dri == 0:
-                    pos[2] = 0
-                    if rk < len(rst_at):
-                        pos[0] = rst_at[rk]
-                        rk += 1
-                    preds = [0] * len(comps)
-                for ci, (cid, chh, cvv, ctq) in enumerate(comps):
-                    dct_t = huffs[(0, smap[cid][0])]
-                    act_t = huffs[(1, smap[cid][1])]
-                    q = qts[ctq]
-                    for bv in range(cvv):
-                        for bh in range(chh):
-                            zz = _np.zeros(64, dtype=_np.int64)
-                            s = huff(dct_t)
-                            preds[ci] += extend(bits(s), s)
-                            zz[0] = preds[ci]
-                            k = 1
-                            while k < 64:
-                                rs = huff(act_t)
-                                r, s = rs >> 4, rs & 15
-                                if s == 0:
-                                    if r == 15:
-                                        k += 16
-                                        continue
-                                    break
-                                k += r
-                                if k > 63:
-                                    raise ValueError("JPEG AC index overflow")
-                                zz[k] = extend(bits(s), s)
-                                k += 1
-                            coef = _np.zeros(64, dtype=_np.float64)
-                            coef[zzo] = (zz * q).astype(_np.float64)
-                            blk = basis.T @ coef.reshape(8, 8) @ basis + 128.0
-                            y0 = (my * cvv + bv) * 8
-                            x0 = (mx * chh + bh) * 8
-                            planes[ci][y0 : y0 + 8, x0 : x0 + 8] = blk
-                mcu_count += 1
-        ups = []
-        for ci, (cid, chh, cvv, ctq) in enumerate(comps):
-            p = _np.repeat(
-                _np.repeat(planes[ci], vmax // cvv, axis=0), hmax // chh, axis=1
-            )
-            ups.append(p[:hgt, :wid])
-        if len(comps) == 1:
-            return _np.clip(_np.rint(ups[0]), 0, 255).astype(_np.int64)
-        y, cb, cr = ups
-        rgb = _np.clip(
-            _np.rint(
-                _np.stack(
-                    [
-                        y + 1.402 * (cr - 128.0),
-                        y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0),
-                        y + 1.772 * (cb - 128.0),
-                    ],
-                    axis=-1,
-                )
-            ),
-            0,
-            255,
-        ).astype(_np.int64)
-        return (
-            299 * rgb[..., 0] + 587 * rgb[..., 1] + 114 * rgb[..., 2]
-        ) // 1000
+    ensure_executor_package(assets.sparkSession)
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # closure-self-contained (workers may not have trx_spark on path)
-        import gzip as _gz
-        import hashlib as _hl
-        import zlib as _zl
+        import hashlib
 
-        import numpy as _np
-        import pandas as _pd
+        import numpy as np
+        import pandas as pd
 
-        def _sniff(buf):
-            # magic bytes: PNG/JPEG signatures, TIFF 'II*\0'/'MM\0*',
-            # CBF '###CBF', EDF header brace (possibly after whitespace)
-            if buf[:8] == b"\x89PNG\r\n\x1a\n":
-                return "png"
-            if buf[:3] == b"\xff\xd8\xff":
-                return "jpeg"
-            if buf[:2] in (b"II", b"MM"):
-                if len(buf) > 4096 and buf[1028:1034] == b"MarCCD":
-                    return "marccd"
-                return "tiff"
-            if buf[:7] == b"FORMAT " and buf[7:8] == b":":
-                return "bruker"
-            if buf[:6] == b"###CBF":
-                return "cbf"
-            if len(buf) >= 4 and (
-                int.from_bytes(buf[:4], "little") == 1234
-                or int.from_bytes(buf[:4], "big") == 1234
-            ):
-                return "mar345"
-            # EDF brace before the unbounded CBF-section search (a
-            # CIF CBF never starts with '{'; saves an O(filesize)
-            # scan per EDF asset — see sniff_codec). ADSC SMV shares
-            # the brace; its mandatory HEADER_BYTES key discriminates
-            if buf.lstrip()[:1] == b"{":
-                return "adsc" if b"HEADER_BYTES" in buf[:512] else "edf"
-            if cbf_section in buf:
-                return "cbf"
-            raise ValueError("unrecognized image format (auto codec)")
+        from trx_spark.operators.multimodal import (
+            decode_edf_frames,
+            decoder_for,
+            maybe_gunzip,
+            png_luma,
+            sniff_codec,
+        )
 
         for pdf in batches:
             out = []
             for _, row in pdf.iterrows():
-                fmt = codec
                 raw = bytes(row["content"])
-                if fmt != "fake" and raw[:2] == b"\x1f\x8b":
-                    # transparent .edf.gz etc. (fabio behavior; the
-                    # reference's default glob is *.edf*)
-                    raw = _gz.decompress(raw)
-                if fmt == "auto":
-                    fmt = _sniff(raw)
-                if fmt == "edf":
-                    frames = [f.astype(float) for f in _parse_edf(raw, _np)]
-                elif fmt == "cbf":
-                    frames = [_parse_cbf(raw, _np).astype(float)]
-                elif fmt == "mar345":
-                    frames = [_parse_mar345(raw, _np).astype(float)]
-                elif fmt == "bruker":
-                    frames = [_parse_bruker(raw, _np).astype(float)]
-                elif fmt == "adsc":
-                    frames = [_parse_adsc(raw, _np).astype(float)]
-                elif fmt == "png":
-                    frames = [_parse_png(raw, _np, _zl).astype(float)]
-                elif fmt == "jpeg":
-                    frames = [_parse_jpeg(raw, _np).astype(float)]
-                elif fmt in ("tiff", "marccd"):
-                    # MarCCD pixels live in the TIFF container — the
-                    # IFD walk is the authoritative decode for both
-                    frames = [_parse_tiff(raw, _np).astype(float)]
+                if codec == "fake":
+                    seed = int.from_bytes(hashlib.sha256(raw).digest()[:4], "big")
+                    rng = np.random.default_rng(seed)
+                    frames = [rng.poisson(100.0, size=(ny, nx))]
                 else:
-                    seed = int.from_bytes(_hl.sha256(raw).digest()[:4], "big")
-                    rng = _np.random.default_rng(seed)
-                    frames = [rng.poisson(100.0, size=(ny, nx)).astype(float)]
+                    raw = maybe_gunzip(raw)
+                    fmt = sniff_codec(raw) if codec == "auto" else codec
+                    if fmt == "edf":
+                        frames = [img for img, _hdr in decode_edf_frames(raw)]
+                    else:
+                        frames = [png_luma(decoder_for(fmt)(raw)[0])]
                 for fk, img in enumerate(frames):
-                    iy, ix = _np.mgrid[0 : img.shape[0], 0 : img.shape[1]]
+                    iy, ix = np.mgrid[0 : img.shape[0], 0 : img.shape[1]]
                     out.append(
-                        _pd.DataFrame(
+                        pd.DataFrame(
                             {
                                 "file": row["file"],
-                                "frame": _np.int32(fk),
+                                "frame": np.int32(fk),
                                 "y": iy.ravel().astype("int32"),
                                 "x": ix.ravel().astype("int32"),
-                                "intensity": img.ravel(),
+                                "intensity": img.ravel().astype(float),
                             }
                         )
                     )
-            yield _pd.concat(out) if out else _pd.DataFrame(
+            yield pd.concat(out) if out else pd.DataFrame(
                 {"file": [], "frame": [], "y": [], "x": [], "intensity": []}
             )
 
@@ -2292,36 +1484,36 @@ def _png_rows_to_samples(
     return mat.reshape(height, width, ch).astype(np.int64)
 
 
-def _png_unfilter(raw: bytes, height: int, stride: int, bpp: int, _np=np) -> np.ndarray:
+def _png_unfilter(raw: bytes, height: int, stride: int, bpp: int) -> np.ndarray:
     """Inflated IDAT scanlines → (height, stride) uint8 matrix of
     reconstructed filtered bytes. Sub is a per-residue-class cumsum
     (mod 256 distributes over the running sum); Up is fully
     vectorized; Average/Paeth recur on the left neighbor and walk the
     row."""
-    out = _np.zeros((height, stride), dtype=_np.uint8)
+    out = np.zeros((height, stride), dtype=np.uint8)
     pos = 0
     for r in range(height):
         ft = raw[pos]
-        line = _np.frombuffer(
-            raw, dtype=_np.uint8, count=stride, offset=pos + 1
-        ).astype(_np.int64)
+        line = np.frombuffer(
+            raw, dtype=np.uint8, count=stride, offset=pos + 1
+        ).astype(np.int64)
         pos += 1 + stride
-        prev = out[r - 1].astype(_np.int64) if r else _np.zeros(stride, dtype=_np.int64)
+        prev = out[r - 1].astype(np.int64) if r else np.zeros(stride, dtype=np.int64)
         if ft == 0:
             rec = line
         elif ft == 1:  # Sub
             rec = line.copy()
             for c in range(bpp):
-                rec[c::bpp] = _np.cumsum(rec[c::bpp]) & 0xFF
+                rec[c::bpp] = np.cumsum(rec[c::bpp]) & 0xFF
         elif ft == 2:  # Up
             rec = (line + prev) & 0xFF
         elif ft == 3:  # Average
-            rec = _np.empty(stride, dtype=_np.int64)
+            rec = np.empty(stride, dtype=np.int64)
             for i in range(stride):
                 left = rec[i - bpp] if i >= bpp else 0
                 rec[i] = (line[i] + ((left + prev[i]) >> 1)) & 0xFF
         elif ft == 4:  # Paeth
-            rec = _np.empty(stride, dtype=_np.int64)
+            rec = np.empty(stride, dtype=np.int64)
             for i in range(stride):
                 a = rec[i - bpp] if i >= bpp else 0
                 b = prev[i]
@@ -2332,7 +1524,7 @@ def _png_unfilter(raw: bytes, height: int, stride: int, bpp: int, _np=np) -> np.
                 rec[i] = (line[i] + pr) & 0xFF
         else:
             raise ValueError(f"bad PNG filter type {ft}")
-        out[r] = rec.astype(_np.uint8)
+        out[r] = rec.astype(np.uint8)
     return out
 
 
@@ -3618,6 +2810,33 @@ def decode_avi_frames(buf: bytes) -> tuple[list[bytes], dict]:
     return frames, header
 
 
+def _decode_avi_first(buf: bytes) -> tuple[np.ndarray, dict]:
+    frames, hdr = decode_avi_frames(buf)
+    return decode_jpeg(frames[0])[0], hdr
+
+
+def _decode_tiff_str_tags(buf: bytes) -> tuple[np.ndarray, dict]:
+    img, tags = decode_tiff(buf)
+    return img, {str(k): v for k, v in tags.items()}
+
+
+# format (as :func:`sniff_codec` names it) → decoder returning
+# (first frame, header); the one dispatch :func:`decode_any` and the
+# :func:`decode_image` kernel share
+DECODERS = {
+    "edf": decode_edf,
+    "cbf": decode_cbf,
+    "tiff": _decode_tiff_str_tags,
+    "mar345": decode_mar345,
+    "marccd": decode_marccd,
+    "bruker": decode_bruker,
+    "adsc": decode_adsc,
+    "png": decode_png,
+    "jpeg": decode_jpeg,
+    "avi": _decode_avi_first,
+}
+
+
 def encode_avi_mjpeg(frames, *, fps: int = 10, quant=None) -> bytes:
     """Encode a sequence of 2-D grayscale / (H, W, 3) RGB arrays as a
     Motion-JPEG AVI (the write side of the video seam and the tests'
@@ -3678,65 +2897,26 @@ def decode_video(
     entropy decode, so skipped frames cost nothing but the chunk seek;
     each selected frame then rides the standard JPEG decode path
     (mapInPandas; 1 frame → H·W rows; no shuffle)."""
+    from trx_spark.sources.imageds import ensure_executor_package
+
+    ensure_executor_package(assets.sparkSession)
     sep = "\x1f"  # unit separator: cannot collide with a path char
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # closure-self-contained (see _parse_edf)
-        import gzip as _gz
+        import pandas as pd
 
-        import pandas as _pd
-
-        def walk(buf, start, end):
-            i = start
-            while i + 8 <= end:
-                fcc = buf[i : i + 4]
-                size = int.from_bytes(buf[i + 4 : i + 8], "little")
-                yield fcc, i + 8, size
-                i += 8 + size + (size & 1)
+        from trx_spark.operators.multimodal import decode_avi_frames, maybe_gunzip
 
         for pdf in batches:
             out = []
             for _, row in pdf.iterrows():
-                raw = bytes(row["content"])
-                if raw[:2] == b"\x1f\x8b":
-                    raw = _gz.decompress(raw)
-                if raw[:4] != b"RIFF" or raw[8:12] != b"AVI ":
-                    raise ValueError("not an AVI stream")
-                comp = None
-                k = 0
-                for fcc, p, sz in walk(raw, 12, len(raw)):
-                    if fcc != b"LIST":
-                        continue
-                    ltype = raw[p : p + 4]
-                    if ltype == b"hdrl":
-                        for f2, p2, s2 in walk(raw, p + 4, p + sz):
-                            if f2 == b"LIST" and raw[p2 : p2 + 4] == b"strl":
-                                for f3, p3, s3 in walk(raw, p2 + 4, p2 + s2):
-                                    if f3 == b"strf" and s3 >= 20:
-                                        comp = raw[p3 + 16 : p3 + 20]
-                    elif ltype == b"movi":
-                        for f2, p2, s2 in walk(raw, p + 4, p + sz):
-                            if f2[2:4] not in (b"dc", b"db"):
-                                continue
-                            if comp is not None and comp.upper() not in (
-                                b"MJPG", b"JPEG",
-                            ):
-                                raise ValueError(
-                                    f"unsupported AVI compression {comp!r}"
-                                )
-                            take = (k % every_n == 0) and (
-                                max_frames is None
-                                or k // every_n < max_frames
-                            )
-                            if take:
-                                out.append(
-                                    (
-                                        f"{row['path']}{sep}{k}",
-                                        bytearray(raw[p2 : p2 + s2]),
-                                    )
-                                )
-                            k += 1
-            yield _pd.DataFrame(out, columns=["path", "content"])
+                blobs, _hdr = decode_avi_frames(maybe_gunzip(bytes(row["content"])))
+                out += [
+                    (f"{row['path']}{sep}{k}", bytearray(blobs[k]))
+                    for k in range(0, len(blobs), every_n)
+                    if max_frames is None or k // every_n < max_frames
+                ]
+            yield pd.DataFrame(out, columns=["path", "content"])
 
     frames = assets.select("path", "content").mapInPandas(
         extract, schema="path string, content binary"
@@ -3761,23 +2941,23 @@ def decode_video(
 # ---------------------------------------------------------------------
 
 
-def _g711_ulaw_table(_np=np) -> np.ndarray:
+def _g711_ulaw_table() -> np.ndarray:
     """All 256 µ-law reconstruction levels (ITU-T G.711 / the classic
     ulaw2linear): int16 linear values indexed by code byte."""
-    c = _np.arange(256)
+    c = np.arange(256)
     m = (~c) & 0xFF
     t = (((m & 0x0F) << 3) + 0x84) << ((m >> 4) & 0x07)
-    return _np.where(m & 0x80, 0x84 - t, t - 0x84).astype(_np.int64)
+    return np.where(m & 0x80, 0x84 - t, t - 0x84).astype(np.int64)
 
 
-def _g711_alaw_table(_np=np) -> np.ndarray:
+def _g711_alaw_table() -> np.ndarray:
     """All 256 A-law reconstruction levels (G.711 alaw2linear)."""
-    c = _np.arange(256) ^ 0x55
+    c = np.arange(256) ^ 0x55
     seg = (c & 0x70) >> 4
     t = (c & 0x0F) << 4
-    t = _np.where(seg == 0, t + 8, ((t + 0x108) << _np.maximum(seg - 1, 0)))
+    t = np.where(seg == 0, t + 8, ((t + 0x108) << np.maximum(seg - 1, 0)))
     # A-law: SET sign bit means positive
-    return _np.where(c & 0x80, t, -t).astype(_np.int64)
+    return np.where(c & 0x80, t, -t).astype(np.int64)
 
 
 def decode_wav(buf: bytes) -> tuple[np.ndarray, int]:
@@ -3982,86 +3162,46 @@ def audio_frame_features(
     if codec not in ("wav", "fake"):
         raise ValueError(f"unknown codec {codec!r}")
 
+    from trx_spark.sources.imageds import ensure_executor_package
+
+    ensure_executor_package(assets.sparkSession)
+
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # closure-self-contained (workers may not import trx_spark)
-        import hashlib as _hl
+        import hashlib
 
-        import numpy as _np
-        import pandas as _pd
+        import numpy as np
+        import pandas as pd
 
-        def _parse_wav(buf):
-            if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-                raise ValueError("not a RIFF/WAVE stream")
-            pos, fmt, data = 12, None, None
-            while pos + 8 <= len(buf):
-                cid = buf[pos : pos + 4]
-                size = int.from_bytes(buf[pos + 4 : pos + 8], "little")
-                body = buf[pos + 8 : pos + 8 + size]
-                if cid == b"fmt ":
-                    fmt = (
-                        int.from_bytes(body[0:2], "little"),
-                        int.from_bytes(body[2:4], "little"),
-                        int.from_bytes(body[4:8], "little"),
-                        int.from_bytes(body[14:16], "little"),
-                    )
-                elif cid == b"data":
-                    data = body
-                pos += 8 + size + (size & 1)
-            if fmt is None or data is None:
-                # mirror decode_wav's explicit guard so a malformed blob
-                # fails diagnosably instead of with an opaque TypeError
-                raise ValueError("missing fmt/data chunk")
-            afmt, nch, rate, bits = fmt
-            if afmt == 1 and bits == 16:
-                s = _np.frombuffer(data, dtype="<i2").astype(_np.float64) / 32768.0
-            elif afmt == 1 and bits == 8:
-                s = (_np.frombuffer(data, dtype="u1").astype(_np.float64) - 128.0) / 128.0
-            elif afmt == 3 and bits == 32:
-                s = _np.frombuffer(data, dtype="<f4").astype(_np.float64)
-            elif afmt == 6 and bits == 8:  # G.711 A-law (twin of module table)
-                c = _np.arange(256) ^ 0x55
-                seg = (c & 0x70) >> 4
-                t = (c & 0x0F) << 4
-                t = _np.where(seg == 0, t + 8, ((t + 0x108) << _np.maximum(seg - 1, 0)))
-                tab = _np.where(c & 0x80, t, -t).astype(_np.int64)
-                s = tab[_np.frombuffer(data, dtype="u1")].astype(_np.float64) / 32768.0
-            elif afmt == 7 and bits == 8:  # G.711 µ-law (twin of module table)
-                m = (~_np.arange(256)) & 0xFF
-                t = (((m & 0x0F) << 3) + 0x84) << ((m >> 4) & 0x07)
-                tab = _np.where(m & 0x80, 0x84 - t, t - 0x84).astype(_np.int64)
-                s = tab[_np.frombuffer(data, dtype="u1")].astype(_np.float64) / 32768.0
-            else:
-                raise ValueError(f"unsupported WAV format ({afmt}, {bits} bit)")
-            n = len(s) // nch
-            return s[: n * nch].reshape(n, nch).mean(axis=1), rate
+        from trx_spark.operators.multimodal import decode_wav
 
         for pdf in batches:
             out = []
             for _, row in pdf.iterrows():
                 if codec == "wav":
-                    mono, rate = _parse_wav(bytes(row["content"]))
+                    samples, rate = decode_wav(bytes(row["content"]))
+                    mono = samples.mean(axis=1)
                 else:
                     seed = int.from_bytes(
-                        _hl.sha256(bytes(row["content"])).digest()[:4], "big"
+                        hashlib.sha256(bytes(row["content"])).digest()[:4], "big"
                     )
-                    rng = _np.random.default_rng(seed)
+                    rng = np.random.default_rng(seed)
                     rate = 16000
                     mono = rng.uniform(-0.5, 0.5, size=rate)
                 n_frames = max(0, 1 + (len(mono) - frame) // hop) if len(mono) >= frame else 0
                 recs = []
                 for k in range(n_frames):
                     w = mono[k * hop : k * hop + frame]
-                    rms = float(_np.sqrt(_np.mean(w * w)))
-                    zcr = float(_np.mean(_np.signbit(w[1:]) != _np.signbit(w[:-1])))
+                    rms = float(np.sqrt(np.mean(w * w)))
+                    zcr = float(np.mean(np.signbit(w[1:]) != np.signbit(w[:-1])))
                     recs.append(
-                        (row["file"], k, k * hop / rate, rms, zcr, float(_np.max(_np.abs(w))))
+                        (row["file"], k, k * hop / rate, rms, zcr, float(np.max(np.abs(w))))
                     )
                 out.append(
-                    _pd.DataFrame(
+                    pd.DataFrame(
                         recs, columns=["file", "frame_idx", "t_start_s", "rms", "zcr", "peak"]
                     )
                 )
-            yield _pd.concat(out) if out else _pd.DataFrame(
+            yield pd.concat(out) if out else pd.DataFrame(
                 {"file": [], "frame_idx": [], "t_start_s": [], "rms": [], "zcr": [], "peak": []}
             )
 

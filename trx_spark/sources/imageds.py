@@ -24,11 +24,15 @@ Filter pushdown (``DataSourceReader.pushFilters``, Spark 4.1):
   sampling contract, surfaced through the planner).
 
 Worker imports: the reader's ``read()`` runs in executor Python
-workers, which must be able to ``import trx_spark``.
-:func:`register_image_datasource` ships the package as a zip via
+workers and decodes with the codecs of
+:mod:`trx_spark.operators.multimodal`, as the ``mapInPandas`` kernels
+there do, so workers must be able to ``import trx_spark``.
+:func:`ensure_executor_package` ships the package as a zip via
 ``SparkContext.addPyFile`` — the same mechanism as ``--py-files`` on a
-real cluster — so registration alone makes the source usable from any
-driver cwd.
+real cluster. :func:`register_image_datasource` and every function
+that builds such a kernel call it, so the source and the kernels work
+from any driver cwd. The zip is built fresh once per process, under a name no other
+process can hold.
 
 Scale notes: ``partitions()`` lists the glob driver-side (``glob`` on
 a POSIX path; on an object store substitute the FileSystem listing —
@@ -38,8 +42,11 @@ RecordBatches (one per frame), never a per-row Python loop.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import glob as _glob
 import os
+import pathlib
 import tempfile
 import zipfile
 
@@ -59,7 +66,7 @@ from pyspark.sql.datasource import (
     StringStartsWith,
 )
 
-PIXEL_SCHEMA = "file string, frame int, y int, x int, intensity double"
+from trx_spark.operators.multimodal import PIXEL_SCHEMA
 
 
 def _matches_file(filters, fname: str) -> bool:
@@ -201,28 +208,27 @@ class DetectorImageDataSource(DataSource):
         return DetectorImageReader(self.options)
 
 
+@functools.cache
 def _package_zip() -> str:
-    """Zip the installed trx_spark package to a temp file (cached per
-    process) — the addPyFile payload that makes executor Python
-    workers able to import the codec module."""
+    """Zip the installed trx_spark package to a new temp file, once per
+    process (removed at exit) — the addPyFile payload that makes
+    executor Python workers able to import the codec module. The name
+    is unique (``mkstemp``): a fixed per-PID name would hand a later
+    process with a recycled PID a zip of older code."""
     import trx_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(trx_spark.__file__))
-    out = os.path.join(
-        tempfile.gettempdir(), f"trx_spark_pkg_{os.getpid()}.zip"
-    )
-    if not os.path.exists(out):
-        with zipfile.ZipFile(out, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in root:
-                    continue
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.join(
-                            "trx_spark", os.path.relpath(full, pkg_dir)
-                        )
-                        zf.write(full, rel)
+    fd, out = tempfile.mkstemp(prefix="trx_spark_pkg_", suffix=".zip")
+    atexit.register(pathlib.Path(out).unlink, missing_ok=True)
+    with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            if "__pycache__" in root:
+                continue
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    rel = os.path.join("trx_spark", os.path.relpath(full, pkg_dir))
+                    zf.write(full, rel)
     return out
 
 
